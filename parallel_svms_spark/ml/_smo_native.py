@@ -40,6 +40,7 @@ import hashlib
 import os
 import subprocess
 import tempfile
+import threading
 
 C_SOURCE = r"""
 #include <math.h>
@@ -178,6 +179,7 @@ _CFLAGS = ["-O2", "-fPIC", "-shared", "-ffp-contract=off"]
 
 _lib = None
 _tried = False
+_lock = threading.Lock()
 
 
 def _cache_root() -> str:
@@ -215,11 +217,21 @@ def _build(so_path: str) -> None:
 def load():
     """ctypes handle to the compiled loop, or None (numpy fallback).
     Memoized per process; the .so is cached per host keyed by source
-    hash, so repeat sessions skip the compile entirely."""
+    hash, so repeat sessions skip the compile entirely. Thread-safe:
+    ``smo.train_svc`` calls this from its pair-solving threads, and a
+    caller arriving while another compiles or opens the library waits
+    for the handle instead of falling back to numpy."""
     global _lib, _tried
     if _tried:
         return _lib
-    _tried = True
+    with _lock:
+        if not _tried:
+            _lib = _open()
+            _tried = True
+    return _lib
+
+
+def _open():
     if os.environ.get("PARALLEL_SVMS_NO_NATIVE_SMO") == "1":
         return None
     try:
@@ -233,7 +245,6 @@ def load():
         fn.restype = ctypes.c_int
         fn.argtypes = [ctypes.POINTER(ctypes.c_double)] * 5 + [
             ctypes.c_long, ctypes.c_double, ctypes.c_double, ctypes.c_long]
-        _lib = lib
+        return lib
     except Exception:
-        _lib = None
-    return _lib
+        return None

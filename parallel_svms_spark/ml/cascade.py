@@ -16,7 +16,8 @@ the per-job HDFS materialization (lineage truncation only — SURVEY
 Scale: per-layer shuffle volume halves (SVs only), so total motion is
 ≤ 2× layer-1 SV bytes regardless of depth; each training group stays
 subset-sized. For 100 TB pick k so that |subset| ≈ 10⁴ rows; layers
-= log₂k jobs of shrinking size, all cluster-parallel until the tip.
+= log₂k jobs of decreasing size, all cluster-parallel until the tip,
+where a bucket task's one-vs-one pairs still run on threads.
 """
 
 from __future__ import annotations
@@ -51,13 +52,13 @@ def _cap_bucket_rows(df: DataFrame, cap: int) -> DataFrame:
     rank — so the kept ``cap`` rows take one row per class per round
     and no class is starved even when the bucket is 99% one label.
     WITHIN a class the order is accuracy-aware when the frame carries
-    a ``w`` column (``trainer.svs_pairwise(with_weight=True)``'s
-    max-dual-α): highest-|α| rows — the C-bound and tight-margin rows
-    that actually carry the decision boundary — rank first, so the
-    cap sheds the flattest duals, not a random coin's pick (VERDICT
-    r7 #6). Rows that were never trained (layer-0 input; the narrow
-    fit_buckets path) have no ``w`` and fall back to the
-    deterministic md5 coin. Either way re-runs reproduce the same
+    a ``w`` column (the max dual α that ``trainer.fit_buckets`` emits
+    on every SV row): highest-|α| rows — the C-bound and tight-margin
+    rows that actually carry the decision boundary — rank first, so
+    the cap sheds the flattest duals, not a random coin's pick
+    (VERDICT r7 #6). Rows that were never trained (layer-0 input)
+    have no ``w`` and fall back to the deterministic md5 coin.
+    Either way re-runs reproduce the same
     subsample (hash/dual of vec_id, no RNG state); buckets already at
     or under the cap pass through IDENTICALLY (every row's rank ≤
     cap), so the well-behaved path — real data shedding SVs per layer
@@ -87,20 +88,23 @@ def cascade_train(df: DataFrame, k: int, C: float = 1.0,
                   checkpoint: bool = True,
                   stats_out: dict | None = None,
                   max_rows_per_bucket: int | None = 20000,
-                  cap_by_weight: bool = True,
                   ) -> tuple[SVCModel, DataFrame]:
     """Train cascade SVM; returns (final model, final SV DataFrame).
+
+    Every layer and the final retrain is one ``trainer.fit_buckets``
+    call: one task per bucket, whose one-vs-one pairs ``smo.train_svc``
+    solves on threads — so the narrow tip (2 buckets, then 1) still
+    uses the task's cores.
 
     df columns: vec_id, label, embedding. Pass ``stats_out={}`` to
     receive ``{"layers": [(n_buckets, n_rows), ...]}`` — the row count
     entering each layer (and the surviving-SV count after each), the
     observable behind the paper's per-layer SV-shrinkage claim (PDF
-    slide 23); costs nothing since the driver loop counts each layer
-    anyway. When the cap is active, ``stats_out`` additionally
+    slide 23). When the cap is active, ``stats_out`` additionally
     receives ``"shed"`` — the rows the cap ACTUALLY dropped per layer
-    (ADVICE r7: callers see when the default changed their result) —
-    at the price of one extra materialization+count per layer, paid
-    only when stats are requested.
+    (ADVICE r7: callers see when the default changed their result).
+    Stats cost one count per layer (plus one extra materialization
+    per layer for ``"shed"``), paid only when they are requested.
 
     ``max_rows_per_bucket`` bounds every layer's per-bucket dual at
     that many rows (see ``_cap_bucket_rows``) — the zero-SV-shedding
@@ -111,19 +115,11 @@ def cascade_train(df: DataFrame, k: int, C: float = 1.0,
     subsample instead of the full dual** — pass ``None`` to disable the
     cap (the reference semantics: Lastcascade.java:109-144 retrains
     whatever survives), and read ``stats_out["shed"]`` to see whether
-    the cap fired at all.
-
-    ``cap_by_weight`` (default True, r8): when a layer will be capped,
-    train it at (bucket × pair) granularity with dual weights
-    (``svs_pairwise(with_weight=True)``) so the cap sheds lowest-|α|
-    rows instead of a blind coin — equal-or-better accuracy at the
-    same cap (measured on the separable fixture, BASELINE.md
-    accuracy-vs-cap table; pinned in tests/test_ml_separable.py).
-    Layer-0 rows are never trained, so the first cap is always the
-    stratified coin. ``False`` restores the pure-coin r7 behavior.
+    the cap fired at all. A merge layer is shed lowest-|α| first,
+    using the ``w`` the previous layer's fit emitted; layer-0 rows were
+    never trained, so the first cap is the stratified coin.
     """
     _validate_k(k)
-    want_w = max_rows_per_bucket is not None and cap_by_weight
     track_shed = stats_out is not None and max_rows_per_bucket is not None
     shed: list[int] = []
 
@@ -137,69 +133,38 @@ def cascade_train(df: DataFrame, k: int, C: float = 1.0,
             n_pre = frame.count()
         return _cap_bucket_rows(frame, max_rows_per_bucket)
 
-    n_pre = 0
-    cur = _cap(balanced_buckets(df, k))
-    # materialize each layer (checkpoint truncates lineage; plain
-    # cache otherwise) — the layer row-count drives strategy choice
-    # and must not recompute the training lineage
-    cur = cur.localCheckpoint() if checkpoint else cur.cache()
-    n_rows = cur.count()
-    n_buckets = k
-    if stats_out is not None:
-        stats_out["layers"] = [(n_buckets, n_rows)]
-        if track_shed:
-            shed.append(n_pre - n_rows)
-            stats_out["shed"] = shed
-    while n_buckets > 1:
-        # strategy per layer: bucket-granular tasks while the layer is
-        # wide (one exchange of each row, plenty of tasks); switch to
-        # (bucket × ovo-pair) tasks once buckets are few AND large —
-        # the narrow tip otherwise serializes 45 duals inside each of
-        # a handful of tasks while the rest of the cluster idles.
-        # A layer whose MERGE the cap can shed ALSO goes pairwise when
-        # cap_by_weight: the pair replication buys the per-row duals
-        # that make the shed accuracy-aware instead of a coin. The
-        # merge fuses two ≤per_bucket buckets, so the cap can bind iff
-        # 2·per_bucket > cap — testing per_bucket alone never fires
-        # (the previous cap clamps per_bucket to ≤cap exactly)
-        per_bucket = n_rows / n_buckets
-        if per_bucket > 3000 or (want_w
-                                 and 2 * per_bucket > max_rows_per_bucket):
-            svs = trainer.svs_pairwise(cur, C=C, gamma=gamma,
-                                       kernel=kernel,
-                                       with_weight=want_w)
-        else:
-            svs = trainer.svs_only(
-                trainer.fit_buckets(cur, C=C, gamma=gamma, kernel=kernel,
-                                    k=n_buckets))
-        # re-cap after the pair-merge: two ≤cap buckets fused into
-        # one ≤2·cap bucket shrink back to ≤cap before training
-        cur = _cap(svs.withColumn(
-            "bucket", F.floor(F.col("bucket") / 2).cast("int")))
+    def _materialize(frame: DataFrame, n_buckets: int) -> DataFrame:
         # truncate lineage between layers (the reference got this
-        # implicitly by materializing each job to HDFS)
-        cur = cur.localCheckpoint() if checkpoint else cur.cache()
-        n_rows = cur.count()
-        n_buckets //= 2
+        # implicitly by materializing each job to HDFS); plain cache
+        # otherwise
+        frame = frame.localCheckpoint() if checkpoint else frame.cache()
         if stats_out is not None:
+            n_rows = frame.count()
             stats_out["layers"].append((n_buckets, n_rows))
             if track_shed:
                 shed.append(n_pre - n_rows)
-    # final retrain on surviving SVs (Lastcascade.java:109-144). The
-    # reference runs this in ONE reducer — the serial tail of Cascade
-    # SVM. Past ~5k surviving SVs the N(N−1)/2 one-vs-one duals are
-    # worth distributing as parallel tasks (fit_global_distributed);
-    # below that, the per-job scheduling overhead exceeds the solve
-    # and one task is faster.
-    if n_rows > 5000:
-        model = trainer.fit_global_distributed(cur, C=C, gamma=gamma,
-                                               kernel=kernel)
-        spark = df.sparkSession
-        svs = spark.createDataFrame(
-            [(0, int(v), int(l), [float(x) for x in e]) for v, l, e in zip(
-                model.sv_orig_idx, model.sv_labels, model.X_sv)],
-            "bucket int, vec_id long, label int, embedding array<float>")
-        return model, svs
+        return frame
+
+    n_pre = 0
+    if stats_out is not None:
+        stats_out["layers"] = []
+        if track_shed:
+            stats_out["shed"] = shed
+    n_buckets = k
+    cur = _materialize(_cap(balanced_buckets(df, k)), n_buckets)
+    while n_buckets > 1:
+        fit = trainer.fit_buckets(cur, C=C, gamma=gamma, kernel=kernel,
+                                  k=n_buckets)
+        svs = (fit.filter(fit.kind == "sv")
+               .select("bucket", "vec_id", "label", "embedding", "w"))
+        # pair-merge, then re-cap: two ≤cap buckets fused into one
+        # ≤2·cap bucket shrink back to ≤cap before training
+        cur = _cap(svs.withColumn(
+            "bucket", F.floor(F.col("bucket") / 2).cast("int")))
+        n_buckets //= 2
+        cur = _materialize(cur, n_buckets)
+    # final retrain on surviving SVs (Lastcascade.java:109-144), in one
+    # task like the reference's single reducer
     fit = trainer.fit_buckets(cur.withColumn("bucket", F.lit(0)),
                               C=C, gamma=gamma, kernel=kernel,
                               with_model=True, k=1)

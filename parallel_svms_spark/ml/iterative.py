@@ -38,25 +38,19 @@ def iterative_train(df: DataFrame, k: int, C: float = 1.0,
 
     Stops when errorsum stops strictly improving or after ``max_iter``
     rounds (`while (newerrorsum < olderrorsum && iteration < 3)`,
-    Iterative_svm/Driver.java:85).
+    Iterative_svm/Driver.java:85). Every round is one
+    ``trainer.fit_buckets`` call (one task per bucket; the one-vs-one
+    pairs inside a task are solved on threads).
     """
     spark = df.sparkSession
     base = balanced_buckets(df, k).localCheckpoint()
-    n_base = base.count()
     bucket_ids = spark.range(k).select(F.col("id").cast("int").alias("bucket"))
-    # (bucket × ovo-pair) task granularity pays off only when BOTH
-    # hold: the cluster has idle slots (4k ≤ slots) AND buckets are
-    # big enough that the serial 45-dual grind dominates orchestration
-    # (same 3 000-row knee as the cascade tip; below it the pairwise
-    # machinery's extra exchange + 45× vote rows cost more than the
-    # idle cores are worth — measured break-even ≈2 500 rows/bucket)
-    starved = 4 * k <= spark.sparkContext.defaultParallelism
     errorsums: list[int] = []
     gsv = None          # global SV set: (vec_id, label, embedding)
     old_err = None
     for _ in range(max_iter):
         if gsv is None:
-            cur, n_cur = base, n_base
+            cur = base
         else:
             # S5/U1: ship the global SV set to every bucket
             # (DistributedCache → broadcast crossJoin) and union with
@@ -64,13 +58,8 @@ def iterative_train(df: DataFrame, k: int, C: float = 1.0,
             gsv_rep = gsv.crossJoin(F.broadcast(bucket_ids)) \
                          .select("vec_id", "label", "embedding", "bucket")
             cur = base.unionByName(gsv_rep)
-            n_cur = n_base + k * n_gsv
-        if starved and n_cur / k > 3000:
-            fit = trainer.fit_buckets_pairwise(
-                cur, C=C, gamma=gamma, kernel=kernel).localCheckpoint()
-        else:
-            fit = trainer.fit_buckets(cur, C=C, gamma=gamma, kernel=kernel,
-                                      eval_train=True, k=k).localCheckpoint()
+        fit = trainer.fit_buckets(cur, C=C, gamma=gamma, kernel=kernel,
+                                  eval_train=True, k=k).localCheckpoint()
         new_err = trainer.err_sum(fit)
         errorsums.append(new_err)
         svs = trainer.svs_only(fit).select("vec_id", "label", "embedding") \
@@ -83,7 +72,6 @@ def iterative_train(df: DataFrame, k: int, C: float = 1.0,
             # append (Itergsv.java:101-109)
             new_svs = svs.join(gsv.select("vec_id"), "vec_id", "left_anti")
             gsv = gsv.unionByName(new_svs).localCheckpoint()
-        n_gsv = gsv.count()     # checkpointed — a metadata-cheap job
         if old_err is not None and not (new_err < old_err):
             break
         old_err = new_err

@@ -3,7 +3,7 @@
 Clean-room replacement for the LibSVM solver the reference calls via
 ``LibSVM_modified.buildClassifier`` (cascade_svm/Midcascade.java:121-122;
 parameter block at Midcascade.java:62-94: C-SVC, RBF kernel,
-γ = 1/max_feature_index, C=1, eps=1e-3, shrinking on, probability off).
+γ = 1/max_feature_index, C=1, eps=1e-3, probability off).
 Multiclass is one-vs-one — N(N−1)/2 binary machines, matching LibSVM
 (PDF slide 6) — with LibSVM's vote + lowest-class tie-break.
 
@@ -21,9 +21,21 @@ imports it directly; ``ml.trainer`` wraps it in applyInPandas.
 
 from __future__ import annotations
 
+import os
+from concurrent.futures import ThreadPoolExecutor
+
 import numpy as np
 
 TAU = 1e-12
+
+
+def _n_cpus() -> int:
+    """Cores this process may run on (its affinity set where the OS
+    exposes one)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
 
 
 def rbf_kernel(X1: np.ndarray, X2: np.ndarray, gamma: float) -> np.ndarray:
@@ -42,8 +54,7 @@ KERNELS = {"rbf": rbf_kernel, "linear": linear_kernel}
 
 
 def smo_solve(K: np.ndarray, y: np.ndarray, C: float = 1.0,
-              eps: float = 1e-3, max_iter: int | None = None,
-              shrinking: bool = False):
+              eps: float = 1e-3, max_iter: int | None = None):
     """Solve min ½αᵀQα − eᵀα, 0 ≤ α ≤ C, yᵀα = 0 with Q=yyᵀ∘K.
 
     Returns (alpha, rho) with LibSVM's sign convention:
@@ -59,88 +70,37 @@ def smo_solve(K: np.ndarray, y: np.ndarray, C: float = 1.0,
     iterations don't help either); convergent problems stop on the
     eps gap long before any cap.
 
-    ``shrinking``: LibSVM's §4 heuristic (the reference trains with
-    param.shrinking = 1, cascade_svm/Midcascade.java:74): every
-    min(n, 1000) iterations, variables provably stuck at a bound —
-    at-bound AND outside the current (m, M) violating band — are
-    frozen out of the working arrays, so every per-iteration O(n)
-    vector op shrinks to O(active). Once the gap reaches 10·eps the
-    full set is reactivated and re-shrunk (LibSVM's one-shot
-    unshrink), and ANY termination on a shrunk set first reconstructs
-    the full gradient and re-checks optimality over all n variables —
-    the final α is eps-KKT on the FULL problem either way.
-
-    Default OFF, by measurement: LibSVM's shrinking pays because its
-    per-iteration cost is on-demand kernel ROW computation (O(active
-    × d) each), which shrinking directly reduces. This solver
-    precomputes the Gram matrix (the right trade at ≤ few-thousand-row
-    bucket sizes — module docstring), so per-iteration cost is ~12
-    short numpy vector ops whose fixed call overhead, not length,
-    dominates at bucket scale; measured min-of-3 at n∈{2k,3k,4k,6k,
-    10k}, label noise 0-100%: shrinking is 0-110% SLOWER (reslice
-    copies + reactivation checks, no row work to save). The switch
-    stays for semantic parity and for callers feeding genuinely large
-    dense problems through a row-on-demand kernel variant.
+    LibSVM's active-set heuristic (on in the reference,
+    cascade_svm/Midcascade.java:74) is left out: it pays because
+    LibSVM computes kernel rows on demand, and freezing bound
+    variables saves row work. This solver precomputes the Gram
+    matrix, so there is no row work to save, and the α it reaches is
+    eps-KKT either way.
     """
     n = len(y)
     if max_iter is None:
         max_iter = max(10_000, min(100 * n, 250_000))
-    if not shrinking:
-        # the hot path every engine caller takes (module docstring: the
-        # precomputed-Gram trade makes shrinking a loss here) — r10
-        # buffer-reusing rewrite, bit-identical by construction (same
-        # ops, same operand order; verified np.array_equal against
-        # _smo_solve_general over a random battery in tests/test_smo.py)
-        return _smo_solve_noshrink(K, y, C, eps, max_iter)
-    return _smo_solve_general(K, y, C, eps, max_iter, shrinking)
+    return _smo_solve_noshrink(K, y, C, eps, max_iter)
 
 
 def _smo_solve_general(K: np.ndarray, y: np.ndarray, C: float,
-                       eps: float, max_iter: int, shrinking: bool):
-    """The original (pre-r10) loop, with the optional shrinking
-    machinery. ``smo_solve`` routes shrinking=True here; it also
-    serves as the reference implementation the fast path's bitwise-
-    equality pytest runs against (shrinking=False here follows the
-    identical trajectory the fast path reproduces)."""
+                       eps: float, max_iter: int):
+    """The original (pre-r10) loop: the reference implementation the
+    fast paths' bitwise-equality pytest runs against. Neither speed
+    nor callers matter here, only that every op and operand order
+    stays as it was."""
     n = len(y)
     y = np.asarray(y, dtype=np.float64)
-    alpha = np.zeros(n)                 # full-problem α, kept current
-    Kdiag_full = np.ascontiguousarray(np.diag(K)).astype(np.float64)
+    alpha = np.zeros(n)
+    Kd = np.ascontiguousarray(np.diag(K)).astype(np.float64)
     NEG_INF, POS_INF = -np.inf, np.inf
-
-    # compact active-set state (global index map + per-active arrays);
-    # K_a is re-sliced CONTIGUOUS on shrink so the hot loop reads
-    # cache-friendly rows instead of paying a gather per iteration
-    ia = np.arange(n)
-    K_a = K
-    y_a = y.copy()
-    alpha_a = np.zeros(n)
-    grad_a = -np.ones(n)                # ∇f(α) = Qα − e, α=0 ⇒ −e
-    Kd_a = Kdiag_full.copy()
-    shrink_every = min(n, 1000)
-    counter = shrink_every
-    unshrunk = False
-
-    def full_grad() -> np.ndarray:
-        nz = np.flatnonzero(alpha > TAU)
-        if len(nz) == 0:
-            return -np.ones(n)
-        return (K[:, nz] @ (alpha[nz] * y[nz])) * y - 1.0
-
-    def reactivate():
-        nonlocal ia, K_a, y_a, alpha_a, grad_a, Kd_a
-        ia = np.arange(n)
-        K_a = K
-        y_a = y.copy()
-        alpha_a = alpha.copy()
-        grad_a = full_grad()
-        Kd_a = Kdiag_full.copy()
+    grad = -np.ones(n)                  # ∇f(α) = Qα − e, α=0 ⇒ −e
 
     for _ in range(max_iter):
-        yg = -y_a * grad_a
+        yg = -y * grad
         # feasible-direction masks as single fused selects
-        up = np.where(y_a > 0, alpha_a < C, alpha_a > 0.0)
-        low = np.where(y_a > 0, alpha_a > 0.0, alpha_a < C)
+        up = np.where(y > 0, alpha < C, alpha > 0.0)
+        low = np.where(y > 0, alpha > 0.0, alpha < C)
         yg_up = np.where(up, yg, NEG_INF)
         li = int(np.argmax(yg_up))
         m = yg_up[li]
@@ -150,114 +110,48 @@ def _smo_solve_general(K: np.ndarray, y: np.ndarray, C: float,
         lj = -1
         if not stalled:
             # second-order j selection among violators, row-vectorized
-            Krow_i = K_a[li]
+            Krow_i = K[li]
             b = m - yg
-            a = Kd_a[li] + Kd_a - (2.0 * y_a[li]) * (y_a * Krow_i)
+            a = Kd[li] + Kd - (2.0 * y[li]) * (y * Krow_i)
             np.maximum(a, TAU, out=a)
             obj = np.where(low & (b > TAU), -(b * b) / a, POS_INF)
             lj = int(np.argmin(obj))
             stalled = obj[lj] == POS_INF
         if stalled:
-            # optimal (or numerically stuck) on the ACTIVE set: verify
-            # on the full set before accepting (LibSVM Solve loop)
-            if shrinking and len(ia) < n:
-                reactivate()
-                counter = 1
-                continue
             break
 
         # two-variable analytic update (keep yᵀα constant, box-clip)
-        Krow_j = K_a[lj]
-        quad = max(Kd_a[li] + Kd_a[lj]
-                   - 2.0 * y_a[li] * y_a[lj] * Krow_i[lj], TAU)
+        Krow_j = K[lj]
+        quad = max(Kd[li] + Kd[lj]
+                   - 2.0 * y[li] * y[lj] * Krow_i[lj], TAU)
         delta = (m - yg[lj]) / quad  # step along (y_i e_i − y_j e_j)
-        old_ai, old_aj = alpha_a[li], alpha_a[lj]
-        ai = old_ai + y_a[li] * delta
+        old_ai, old_aj = alpha[li], alpha[lj]
+        ai = old_ai + y[li] * delta
         # clip to the box while preserving the equality constraint
-        s = y_a[li] * old_ai + y_a[lj] * old_aj
+        s = y[li] * old_ai + y[lj] * old_aj
         ai = min(max(ai, 0.0), C)
-        aj = y_a[lj] * (s - y_a[li] * ai)
+        aj = y[lj] * (s - y[li] * ai)
         if aj < 0.0:
             aj = 0.0
-            ai = y_a[li] * (s - y_a[lj] * aj)
+            ai = y[li] * (s - y[lj] * aj)
         elif aj > C:
             aj = C
-            ai = y_a[li] * (s - y_a[lj] * aj)
+            ai = y[li] * (s - y[lj] * aj)
         dai, daj = ai - old_ai, aj - old_aj
         if abs(dai) < TAU and abs(daj) < TAU:
-            if shrinking and len(ia) < n:
-                reactivate()
-                counter = 1
-                continue
             break
-        alpha_a[li], alpha_a[lj] = ai, aj
-        alpha[ia[li]], alpha[ia[lj]] = ai, aj
-        grad_a += (y_a * Krow_i) * (y_a[li] * dai) \
-            + (y_a * Krow_j) * (y_a[lj] * daj)
+        alpha[li], alpha[lj] = ai, aj
+        grad += (y * Krow_i) * (y[li] * dai) + (y * Krow_j) * (y[lj] * daj)
 
-        if shrinking:
-            counter -= 1
-            if counter <= 0:
-                counter = shrink_every
-                yg2 = -y_a * grad_a
-                up2 = np.where(y_a > 0, alpha_a < C, alpha_a > 0.0)
-                low2 = np.where(y_a > 0, alpha_a > 0.0, alpha_a < C)
-                m2 = np.where(up2, yg2, NEG_INF).max()
-                M2 = np.where(low2, yg2, POS_INF).min()
-                if not unshrunk and m2 - M2 <= 10.0 * eps and len(ia) < n:
-                    # LibSVM's one-shot unshrink near convergence
-                    unshrunk = True
-                    reactivate()
-                    yg2 = -y_a * grad_a
-                    up2 = np.where(y_a > 0, alpha_a < C, alpha_a > 0.0)
-                    low2 = np.where(y_a > 0, alpha_a > 0.0, alpha_a < C)
-                    m2 = np.where(up2, yg2, NEG_INF).max()
-                    M2 = np.where(low2, yg2, POS_INF).min()
-                pos = y_a > 0
-                at_up = alpha_a >= C - TAU
-                at_low = alpha_a <= TAU
-                shrink_mask = (
-                    ((at_up & pos) | (at_low & ~pos)) & (yg2 > m2)
-                ) | (
-                    ((at_up & ~pos) | (at_low & pos)) & (yg2 < M2)
-                )
-                # apply only when the drop pays for the O(|A|²) K
-                # re-slice: a <12.5% shrink saves less per iteration
-                # than the contiguous copy costs (LibSVM's swap-based
-                # shrink is free per element; an array re-slice isn't)
-                n_shrink = int(shrink_mask.sum())
-                n_keep = len(ia) - n_shrink
-                if n_keep >= 2 and n_shrink >= max(64, len(ia) // 8):
-                    keep = ~shrink_mask
-                    ia = ia[keep]
-                    y_a = y_a[keep]
-                    alpha_a = alpha_a[keep]
-                    grad_a = grad_a[keep]
-                    Kd_a = Kd_a[keep]
-                    K_a = np.ascontiguousarray(K[np.ix_(ia, ia)])
-
-    # rho: average of y∇f over free SVs, else midpoint (LibSVM's
-    # calculate_rho) — on the FULL gradient (grad_a IS it when the
-    # final active set is the whole problem)
-    yg = y * (grad_a if len(ia) == n else full_grad())
-    free = (alpha > TAU) & (alpha < C - TAU)
-    if free.any():
-        rho = yg[free].mean()
-    else:
-        up = ((y > 0) & (alpha < C)) | ((y < 0) & (alpha > 0))
-        low = ((y < 0) & (alpha < C)) | ((y > 0) & (alpha > 0))
-        ub = yg[up].max() if up.any() else 0.0
-        lb = yg[low].min() if low.any() else 0.0
-        rho = (ub + lb) / 2.0
-    return alpha, rho
+    return alpha, _rho_epilogue(y, alpha, grad, C)
 
 
 def _rho_epilogue(y: np.ndarray, alpha: np.ndarray, grad: np.ndarray,
                   C: float) -> float:
-    """Shared rho computation over the final (alpha, grad) iterate —
-    identical to the reference epilogue; grad IS the full gradient on
-    the no-shrink paths. One implementation so the numpy and native
-    loops cannot drift."""
+    """Shared rho computation over the final (alpha, grad) iterate:
+    the average of y∇f over free SVs, else the midpoint (LibSVM's
+    calculate_rho). One implementation so the reference, numpy and
+    native loops cannot drift."""
     yg_f = y * grad
     free = (alpha > TAU) & (alpha < C - TAU)
     if free.any():
@@ -307,7 +201,7 @@ def _smo_solve_noshrink_native(lib, K: np.ndarray, y: np.ndarray,
 
 def _smo_solve_noshrink_np(K: np.ndarray, y: np.ndarray, C: float,
                            eps: float, max_iter: int):
-    """``smo_solve(shrinking=False)``'s loop with per-iteration
+    """``_smo_solve_general``'s loop with per-iteration
     allocations hoisted out (guide §1.2 step 2 — per-task work): every
     n-length temporary is a preallocated buffer written with ``out=``
     ufuncs, ``np.where`` selects become fill+``np.copyto(where=)``,
@@ -505,6 +399,10 @@ def train_svc(X: np.ndarray, y: np.ndarray, C: float = 1.0,
     Classes are ordered by sorted value (LibSVM orders by first
     appearance; sorted is deterministic under any partitioning —
     documented semantic delta, SURVEY §7).
+
+    The N(N−1)/2 pair duals are solved on a thread pool sized to the
+    cores the process may use; the model is bit-identical to a serial
+    loop over the pairs for any thread count.
     """
     X = np.asarray(X, dtype=np.float64)
     y = np.asarray(y)
@@ -517,17 +415,25 @@ def train_svc(X: np.ndarray, y: np.ndarray, C: float = 1.0,
     kern = KERNELS[kernel]
     K_full = kern(X, X, gamma)
 
+    def solve(pair):
+        a, b = pair
+        sel = np.flatnonzero((y == classes[a]) | (y == classes[b]))
+        ys = np.where(y[sel] == classes[a], 1.0, -1.0)
+        Ks = K_full[np.ix_(sel, sel)]
+        alpha, rho = smo_solve(Ks, ys, C=C, eps=eps)
+        nz = alpha > TAU
+        return sel[nz], alpha[nz] * ys[nz], rho
+
+    # the binary duals are independent and the native loop releases
+    # the GIL, so they run on threads; map() keeps pair order, and each
+    # dual is the same computation as a serial solve, bit for bit
+    pairs = [(a, b) for a in range(len(classes))
+             for b in range(a + 1, len(classes))]
+    with ThreadPoolExecutor(max(1, min(len(pairs), _n_cpus()))) as pool:
+        raw = dict(zip(pairs, pool.map(solve, pairs)))
     sv_mask = np.zeros(len(y), dtype=bool)
-    raw = {}
-    for a in range(len(classes)):
-        for b in range(a + 1, len(classes)):
-            sel = np.flatnonzero((y == classes[a]) | (y == classes[b]))
-            ys = np.where(y[sel] == classes[a], 1.0, -1.0)
-            Ks = K_full[np.ix_(sel, sel)]
-            alpha, rho = smo_solve(Ks, ys, C=C, eps=eps)
-            nz = alpha > TAU
-            raw[(a, b)] = (sel[nz], alpha[nz] * ys[nz], rho)
-            sv_mask[sel[nz]] = True
+    for orig_idx, _, _ in raw.values():
+        sv_mask[orig_idx] = True
 
     sv_idx = np.flatnonzero(sv_mask)          # ascending original order
     pos_of = {orig: p for p, orig in enumerate(sv_idx)}

@@ -13,6 +13,12 @@ the total data size — that is the premise of partitioned SVM training
 (PDF slides 12-17) — so executor memory per task is bounded by the
 subset, not the dataset. k scales with data; the solver never sees
 more than a subset + the (small, distilled) SV set.
+
+One trainer path: every cascade layer, iterative round, bagging model
+and final retrain is one ``fit_buckets`` call — bucket tasks, and
+inside each task ``smo.train_svc`` solves the one-vs-one pairs on
+threads. A narrow layer (few buckets) therefore still uses the
+executor's cores without replicating rows across pairs.
 """
 
 from __future__ import annotations
@@ -30,8 +36,12 @@ from parallel_svms_spark.ml import smo
 #   kind='err'    → per-class training-error metric rows (M5/A4,
 #                   Itergsv.java:95-97): err = floor(class_error_rate*100)
 #   kind='model'  → one row per bucket with the serialized model (S4)
+# w: on 'sv' rows, the row's largest |dual coef| over the bucket
+# model's pairs (= its max α); cascade._cap_bucket_rows sheds the
+# smallest first. Null on the other kinds.
 FIT_SCHEMA = ("bucket int, kind string, vec_id long, label int, "
-              "embedding array<float>, err long, model_json string")
+              "embedding array<float>, err long, model_json string, "
+              "w double")
 
 
 def fit_buckets(df: DataFrame, C: float = 1.0, gamma: float | None = None,
@@ -66,12 +76,15 @@ def fit_buckets(df: DataFrame, C: float = 1.0, gamma: float | None = None,
         y = pdf["label"].to_numpy()
         model = smo.train_svc(X, y, C=C, gamma=gamma, kernel=kernel, eps=eps)
         sv = pdf.iloc[model.sv_orig_idx]
+        w = np.zeros(model.n_sv)
+        for idx, coef in model.pair_coefs.values():
+            w[idx] = np.maximum(w[idx], np.abs(coef))
         out = pd.DataFrame({
             "bucket": bucket, "kind": "sv",
             "vec_id": sv["vec_id"].to_numpy(),
             "label": sv["label"].to_numpy(),
             "embedding": sv["embedding"].to_numpy(),
-            "err": np.int64(0), "model_json": None,
+            "err": np.int64(0), "model_json": None, "w": w,
         })
         extra = []
         if eval_train:
@@ -93,287 +106,6 @@ def fit_buckets(df: DataFrame, C: float = 1.0, gamma: float | None = None,
         return out
 
     return df.groupBy("bucket").applyInPandas(train, schema=FIT_SCHEMA)
-
-
-def fit_global_distributed(df: DataFrame, C: float = 1.0,
-                           gamma: float | None = None, kernel: str = "rbf",
-                           eps: float = 1e-3) -> smo.SVCModel:
-    """M3 final/global train, parallelized across one-vs-one pairs.
-
-    The reference's last cascade layer trains the merged SV set inside
-    a SINGLE reducer (Lastcascade.java:109-144) — the serial tail of
-    Cascade SVM. But the N(N−1)/2 binary sub-problems of one-vs-one
-    are independent, so here each becomes its own Spark task: rows are
-    replicated to the (N−1) pairs their class participates in via a
-    broadcast pair-table join, and ``groupBy(pair_id).applyInPandas``
-    solves each dual separately. 10 classes ⇒ 45-way parallelism for
-    the stage that is otherwise single-threaded.
-
-    Returns the assembled SVCModel — numerically equivalent to
-    ``smo.train_svc`` on the same rows (same solver, row order and
-    class order; the per-pair kernel is evaluated directly instead of
-    sliced from the full Gram matrix, so duals can differ in float
-    noise), which the tests assert.
-    """
-    from pyspark.sql import functions as F
-    spark = df.sparkSession
-    classes = sorted(r[0] for r in df.select("label").distinct().collect())
-    cls_idx = {c: i for i, c in enumerate(classes)}
-    pairs = [(a, b) for i, a in enumerate(classes) for b in classes[i + 1:]]
-    pair_df = spark.createDataFrame(
-        [(i, int(a), int(b)) for i, (a, b) in enumerate(pairs)],
-        "pair_id int, ca int, cb int")
-    rep = df.select("vec_id", "label", "embedding").join(
-        F.broadcast(pair_df),
-        (F.col("label") == F.col("ca")) | (F.col("label") == F.col("cb")))
-    n_features = len(df.select("embedding").first()[0])
-    g = gamma if gamma is not None else 1.0 / n_features
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(pdf["pair_id"].iloc[0])
-        ca = int(pdf["ca"].iloc[0])
-        pdf = pdf.sort_values("vec_id", kind="mergesort").reset_index(drop=True)
-        X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        ys = np.where(pdf["label"].to_numpy() == ca, 1.0, -1.0)
-        K = smo.KERNELS[kernel](X, X, g)
-        alpha, rho = smo.smo_solve(K, ys, C=C, eps=eps)
-        nz = alpha > smo.TAU
-        out = pd.DataFrame({
-            "pair_id": pid,
-            "vec_id": pdf["vec_id"].to_numpy()[nz],
-            "label": pdf["label"].to_numpy()[nz],
-            "coef": (alpha * ys)[nz],
-            "rho": rho,
-        })
-        if not len(out):           # degenerate pair: carry rho anyway
-            out = pd.DataFrame({"pair_id": [pid], "vec_id": [-1],
-                                "label": [-1], "coef": [0.0], "rho": [rho]})
-        return out
-
-    solved = rep.groupBy("pair_id").applyInPandas(
-        solve, schema="pair_id int, vec_id long, label int, "
-                      "coef double, rho double").collect()
-
-    rhos = {}
-    by_pair: dict[int, list] = {}
-    sv_ids = set()
-    for r in solved:
-        a, b = pairs[r.pair_id]
-        rhos[(cls_idx[a], cls_idx[b])] = float(r.rho)
-        if r.vec_id >= 0:
-            by_pair.setdefault(r.pair_id, []).append((r.vec_id, r.coef))
-            sv_ids.add(r.vec_id)
-    # fetch SV feature rows once (final SV set is driver-small by the
-    # cascade premise; same scale as the reference's saved model file).
-    # Semi-join against a broadcast id frame — NOT isin(): thousands of
-    # literals make Catalyst chew seconds of plan-compile time
-    ids_df = spark.createDataFrame([(int(i),) for i in sorted(sv_ids)],
-                                   "vec_id long")
-    sv_rows = (df.join(F.broadcast(ids_df), "vec_id", "left_semi")
-               .select("vec_id", "label", "embedding").collect())
-    sv_rows.sort(key=lambda r: r.vec_id)
-    pos_of = {r.vec_id: p for p, r in enumerate(sv_rows)}
-    X_sv = np.asarray([list(r.embedding) for r in sv_rows], dtype=np.float64)
-    sv_labels = np.asarray([r.label for r in sv_rows])
-    pair_coefs = {}
-    for pid, items in by_pair.items():
-        items.sort(key=lambda t: t[0])
-        a, b = pairs[pid]
-        pair_coefs[(cls_idx[a], cls_idx[b])] = (
-            np.asarray([pos_of[v] for v, _ in items], dtype=np.int64),
-            np.asarray([c for _, c in items], dtype=np.float64))
-    for key in rhos:
-        pair_coefs.setdefault(key, (np.empty(0, dtype=np.int64),
-                                    np.empty(0, dtype=np.float64)))
-    # sv_orig_idx carries the SVs' vec_ids (global frame ⇒ the stable
-    # id IS the origin reference, unlike the per-bucket positional case)
-    return smo.SVCModel(np.asarray(classes), X_sv, sv_labels, pair_coefs,
-                        rhos, kernel=kernel, gamma=g, C=C,
-                        sv_orig_idx=np.asarray([r.vec_id for r in sv_rows]))
-
-
-def svs_pairwise(df: DataFrame, C: float = 1.0,
-                 gamma: float | None = None, kernel: str = "rbf",
-                 eps: float = 1e-3, classes: list[int] | None = None,
-                 with_weight: bool = False) -> DataFrame:
-    """SV extraction with (bucket × one-vs-one pair) task granularity.
-
-    ``fit_buckets`` solves a bucket's N(N−1)/2 one-vs-one duals
-    SERIALLY inside one task — the right shape for wide cascade layers
-    (many buckets = many tasks, and the exchange moves each row once).
-    At the cascade TIP the tree narrows: few buckets, each large, so
-    bucket-granular tasks leave the cluster idle while each task
-    grinds 45 duals in sequence. Here every (bucket, pair) becomes its
-    own task: B buckets → 45·B-way parallelism, and each task's kernel
-    matrix shrinks ~(2/N_classes)² since only the pair's two classes
-    ship to it. Cost: rows replicate to the (N−1) pairs their class
-    participates in — 9× exchange at 10 classes — which is why this is
-    the TIP strategy, not the everywhere strategy.
-
-    A bucket's SV set is the union over pairs of rows with nonzero
-    dual (smo.train_svc's sv_mask) — so dropDuplicates over the
-    per-pair nonzero rows reproduces fit_buckets' SV output exactly
-    (modulo per-pair-kernel float noise, as fit_global_distributed).
-
-    ``with_weight=True`` additionally emits ``w`` — each SV's largest
-    dual α across its pairs (the margin-importance signal: C-bound
-    rows and tight-margin rows carry the decision boundary) — and the
-    per-pair dedup becomes a max-w aggregation over the SAME row set.
-    ``cascade._cap_bucket_rows`` consumes it to shed lowest-|α| rows
-    first when a layer exceeds the dual cap (VERDICT r7 #6).
-    """
-    from pyspark.sql import functions as F
-    spark = df.sparkSession
-    if classes is None:
-        classes = sorted(r[0] for r in df.select("label").distinct().collect())
-    pairs = [(a, b) for i, a in enumerate(classes) for b in classes[i + 1:]]
-    pair_df = spark.createDataFrame(
-        [(i, int(a), int(b)) for i, (a, b) in enumerate(pairs)],
-        "pair_id int, ca int, cb int")
-    n_features = len(df.select("embedding").first()[0])
-    g = gamma if gamma is not None else 1.0 / n_features
-    rep = df.select("bucket", "vec_id", "label", "embedding").join(
-        F.broadcast(pair_df),
-        (F.col("label") == F.col("ca")) | (F.col("label") == F.col("cb")))
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id", kind="mergesort").reset_index(drop=True)
-        ca = int(pdf["ca"].iloc[0])
-        X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        ys = np.where(pdf["label"].to_numpy() == ca, 1.0, -1.0)
-        K = smo.KERNELS[kernel](X, X, g)
-        alpha, _ = smo.smo_solve(K, ys, C=C, eps=eps)
-        nz = alpha > smo.TAU
-        out = pd.DataFrame({
-            "bucket": pdf["bucket"].to_numpy()[nz],
-            "vec_id": pdf["vec_id"].to_numpy()[nz],
-            "label": pdf["label"].to_numpy()[nz],
-            "embedding": pdf["embedding"].to_numpy()[nz],
-        })
-        if with_weight:
-            out["w"] = alpha[nz]
-        return out
-
-    n_groups = df.select("bucket").distinct().count() * max(len(pairs), 1)
-    rep = rep.repartition(min(4 * n_groups, 1024), "bucket", "pair_id")
-    schema = ("bucket int, vec_id long, label int, "
-              "embedding array<float>" + (", w double" if with_weight
-                                          else ""))
-    out = rep.groupBy("bucket", "pair_id").applyInPandas(solve,
-                                                         schema=schema)
-    if with_weight:
-        # same row set as the dropDuplicates path (every emitted row
-        # has α > TAU); the dedup doubles as the max-α reduction, and
-        # label/embedding are functionally determined by vec_id
-        return (out.groupBy("bucket", "vec_id")
-                .agg(F.max("w").alias("w"),
-                     F.first("label").alias("label"),
-                     F.first("embedding").alias("embedding"))
-                .select("bucket", "vec_id", "label", "embedding", "w"))
-    return out.dropDuplicates(["bucket", "vec_id"])
-
-
-def fit_buckets_pairwise(df: DataFrame, C: float = 1.0,
-                         gamma: float | None = None, kernel: str = "rbf",
-                         eps: float = 1e-3,
-                         classes: list[int] | None = None) -> DataFrame:
-    """``fit_buckets(eval_train=True)`` at (bucket × ovo-pair) task
-    granularity — the parallelism-starved regime of the iterative
-    driver (Itergsv.java:51-110 trains + evaluates per partition).
-
-    With k buckets on a machine/cluster with ≫k slots, bucket-granular
-    tasks serialize each bucket's N(N−1)/2 duals AND its OvO-vote
-    evaluation inside one task. Here every (bucket, pair) group gets
-    ALL the bucket's rows (vote needs every pair model to score every
-    row), trains on the pair's two classes, and emits (a) its nonzero-
-    dual rows as kind='sv' and (b) one kind='err' VOTE row per scored
-    row with the voted class in ``err``. The per-class errorsum rows
-    are then assembled relationally: vote-count → argmax with LibSVM's
-    lowest-class tie-break (SVCModel.predict) → per-class error rate.
-
-    Cost vs fit_buckets: the exchange replicates each row 45× (all
-    pairs must score it) — the price of 45·k-way parallelism. Use only
-    when k ≪ cluster slots; wide layers keep bucket granularity.
-
-    Output is FIT_SCHEMA-compatible: kind='sv' rows identical to
-    fit_buckets modulo per-pair-kernel float noise (as
-    fit_global_distributed), kind='err' rows exactly err_sum's input.
-    """
-    from pyspark.sql import functions as F
-    spark = df.sparkSession
-    if classes is None:
-        classes = sorted(r[0] for r in df.select("label").distinct().collect())
-    pairs = [(a, b) for i, a in enumerate(classes) for b in classes[i + 1:]]
-    pair_df = spark.createDataFrame(
-        [(i, int(a), int(b)) for i, (a, b) in enumerate(pairs)],
-        "pair_id int, ca int, cb int")
-    n_features = len(df.select("embedding").first()[0])
-    g = gamma if gamma is not None else 1.0 / n_features
-    rep = df.select("bucket", "vec_id", "label", "embedding") \
-            .crossJoin(F.broadcast(pair_df))
-
-    def solve_and_vote(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id", kind="mergesort").reset_index(drop=True)
-        bucket = int(pdf["bucket"].iloc[0])
-        ca, cb = int(pdf["ca"].iloc[0]), int(pdf["cb"].iloc[0])
-        labels = pdf["label"].to_numpy()
-        sub = pdf[(labels == ca) | (labels == cb)].reset_index(drop=True)
-        # a pair with either class absent from the bucket does not
-        # exist in the bucket-local model (train_svc derives classes
-        # from the bucket's own labels) — emit nothing so the vote
-        # tally sees exactly the bucket-local pair set
-        if len(sub) == 0 or sub["label"].nunique() < 2:
-            return pd.DataFrame({"bucket": pd.Series([], dtype="int64"),
-                                 "kind": [], "vec_id": [], "label": [],
-                                 "embedding": [], "err": [],
-                                 "model_json": []})
-        Xs = np.stack(sub["embedding"].to_numpy()).astype(np.float64)
-        ys = np.where(sub["label"].to_numpy() == ca, 1.0, -1.0)
-        K = smo.KERNELS[kernel](Xs, Xs, g)
-        alpha, rho = smo.smo_solve(K, ys, C=C, eps=eps)
-        nz = alpha > smo.TAU
-        X_all = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        d = smo.KERNELS[kernel](X_all, Xs[nz], g) @ (alpha * ys)[nz] - rho
-        vote = np.where(d > 0, ca, cb)          # SVCModel.predict:171-173
-        sv = pd.DataFrame({
-            "bucket": bucket, "kind": "sv",
-            "vec_id": sub["vec_id"].to_numpy()[nz],
-            "label": sub["label"].to_numpy()[nz],
-            "embedding": sub["embedding"].to_numpy()[nz],
-            "err": np.int64(0), "model_json": None,
-        })
-        votes = pd.DataFrame({
-            "bucket": bucket, "kind": "vote",
-            "vec_id": pdf["vec_id"].to_numpy(),
-            "label": labels, "embedding": None,
-            "err": vote.astype(np.int64), "model_json": None,
-        })
-        return pd.concat([sv, votes], ignore_index=True)
-
-    n_groups = df.select("bucket").distinct().count() * max(len(pairs), 1)
-    rep = rep.repartition(min(4 * n_groups, 1024), "bucket", "pair_id")
-    # materialize ONCE: the sv and err branches below both scan `out`,
-    # and an uncached union would re-run every solve twice
-    out = rep.groupBy("bucket", "pair_id") \
-             .applyInPandas(solve_and_vote, schema=FIT_SCHEMA).cache()
-    svs = out.filter(out.kind == "sv").dropDuplicates(["bucket", "vec_id"])
-    # votes → prediction: max count, ties to the LOWEST class (argmax
-    # takes the first maximum; classes are tallied in ascending order)
-    pred = (out.filter(out.kind == "vote")
-            .groupBy("bucket", "vec_id", "label", F.col("err").alias("vote"))
-            .agg(F.count("*").alias("cnt"))
-            .groupBy("bucket", "vec_id", "label")
-            .agg(F.max(F.struct(F.col("cnt"), (-F.col("vote")).alias("ng")))
-                 .alias("m")))
-    errs = (pred.groupBy("bucket", "label")
-            .agg(F.floor(F.avg((-F.col("m.ng") != F.col("label"))
-                               .cast("double")) * 100).alias("err"))
-            .select("bucket", F.lit("err").alias("kind"),
-                    F.lit(-1).cast("long").alias("vec_id"), "label",
-                    F.lit(None).cast("array<float>").alias("embedding"),
-                    F.col("err").cast("long"),
-                    F.lit(None).cast("string").alias("model_json")))
-    return svs.unionByName(errs)
 
 
 def svs_only(fit_result: DataFrame) -> DataFrame:

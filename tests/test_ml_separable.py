@@ -158,11 +158,19 @@ def test_iterative_accuracy_and_error_signal(blobs, single_model_acc):
 
 def test_cascade_cap_weight_beats_coin(spark):
     """VERDICT r7 #6: at the same binding cap, shedding lowest-|alpha|
-    rows (cap_by_weight=True, default) must train an equal-or-better
-    model than the stratified md5 coin — the duals know which rows
-    carry the boundary; the coin does not. Noisier blobs than the
-    envelope fixture so buckets produce MORE SVs than the cap and the
-    shed decision actually matters."""
+    rows (the ``w`` fit_buckets emits on SV rows) must keep a set that
+    trains an equal-or-better model than the stratified md5 coin —
+    the duals know which rows carry the boundary; the coin does not.
+    Both orders cap the same trained merge layer; the coin order is
+    that layer with ``w`` dropped (as layer-0 rows, which have no
+    ``w``, are capped). Noisier blobs than the envelope fixture so
+    buckets produce MORE SVs than the cap and the shed decision
+    actually matters."""
+    from pyspark.sql import functions as F
+
+    from parallel_svms_spark.ml.cascade import _cap_bucket_rows
+    from parallel_svms_spark.operators.partitioning import balanced_buckets
+
     X, y = _blobs(n=1200, n_classes=4, dim=8, spread=4.0, std=2.0,
                   seed=3)
     rows = [(int(i), int(y[i]), [float(v) for v in X[i]])
@@ -171,28 +179,29 @@ def test_cascade_cap_weight_beats_coin(spark):
         rows, "vec_id long, label int, embedding array<float>") \
         .repartition(8).localCheckpoint()
     cap = 80
-    stats_w: dict = {}
-    model_w, svs_w = cascade_train(df, k=4, gamma=1.0 / 8,
-                                   max_rows_per_bucket=cap,
-                                   cap_by_weight=True,
-                                   stats_out=stats_w)
-    stats_c: dict = {}
-    model_c, svs_c = cascade_train(df, k=4, gamma=1.0 / 8,
-                                   max_rows_per_bucket=cap,
-                                   cap_by_weight=False,
-                                   stats_out=stats_c)
-    # the cap must actually bind on a merge layer (ADVICE r7: the
-    # shed log is how callers see it) or the test proves nothing
-    assert any(s > 0 for s in stats_w["shed"][1:]), stats_w
-    assert any(s > 0 for s in stats_c["shed"][1:]), stats_c
-    # ... and the ordering must actually ENGAGE: the two runs keep
-    # different SV sets (an identical set would mean the weight path
-    # silently never ran — the bug this assert exists to catch)
-    ids_w = {r.vec_id for r in svs_w.select("vec_id").collect()}
-    ids_c = {r.vec_id for r in svs_c.select("vec_id").collect()}
-    assert ids_w != ids_c
-    acc_w = float((model_w.predict(X.astype(np.float64)) == y).mean())
-    acc_c = float((model_c.predict(X.astype(np.float64)) == y).mean())
+    layer0 = _cap_bucket_rows(balanced_buckets(df, 4), cap).localCheckpoint()
+    fit = trainer.fit_buckets(layer0, gamma=1.0 / 8, k=4)
+    merged = (fit.filter("kind = 'sv'")
+              .select(F.floor(F.col("bucket") / 2).cast("int")
+                      .alias("bucket"), "vec_id", "label", "embedding", "w")
+              .localCheckpoint())
+    # the cap must actually bind on the merge layer or the test proves
+    # nothing
+    sizes = [r[1] for r in merged.groupBy("bucket").count().collect()]
+    assert max(sizes) > cap, sizes
+    kept_w = _cap_bucket_rows(merged, cap).collect()
+    kept_c = _cap_bucket_rows(merged.drop("w"), cap).collect()
+    # ... and the ordering must actually ENGAGE: the two orders keep
+    # different sets (an identical set would mean w was never used)
+    assert {r.vec_id for r in kept_w} != {r.vec_id for r in kept_c}
+
+    def acc(kept):
+        model = smo.train_svc(
+            np.asarray([r.embedding for r in kept], dtype=np.float64),
+            np.asarray([r.label for r in kept]), gamma=1.0 / 8)
+        return float((model.predict(X.astype(np.float64)) == y).mean())
+
+    acc_w, acc_c = acc(kept_w), acc(kept_c)
     assert acc_w >= acc_c, (acc_w, acc_c)
 
 

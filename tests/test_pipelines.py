@@ -68,24 +68,32 @@ def test_iterative_grows_gsv_and_stops(spark, emb):
     assert gsv.select("vec_id").distinct().count() == gsv.count()
 
 
-def test_fit_buckets_pairwise_matches_bucket_granular(spark, emb):
-    # the parallelism-starved path must reproduce fit_buckets exactly:
-    # same SV sets, same per-class error rows, same errorsum
+def test_fit_buckets_sv_rows_carry_max_dual_weight(spark, emb):
+    # every SV row carries w = its largest |coef| over the pairs of the
+    # bucket's train_svc model (the order the cascade cap sheds by)
+    import numpy as np
+
+    from parallel_svms_spark.ml import smo
     from parallel_svms_spark.operators.partitioning import balanced_buckets
     base = balanced_buckets(emb, 2).localCheckpoint()
-    fit_a = trainer.fit_buckets(base, eval_train=True, k=2)
-    fit_b = trainer.fit_buckets_pairwise(base)
-    sv_a = sorted((r.bucket, r.vec_id)
-                  for r in fit_a.filter("kind='sv'").collect())
-    sv_b = sorted((r.bucket, r.vec_id)
-                  for r in fit_b.filter("kind='sv'").collect())
-    assert sv_a == sv_b
-    err_a = sorted((r.bucket, r.label, r.err)
-                   for r in fit_a.filter("kind='err'").collect())
-    err_b = sorted((r.bucket, r.label, r.err)
-                   for r in fit_b.filter("kind='err'").collect())
-    assert err_a == err_b
-    assert trainer.err_sum(fit_a) == trainer.err_sum(fit_b)
+    svs = trainer.fit_buckets(base, gamma=2.0, k=2) \
+        .filter("kind = 'sv'").collect()
+    assert svs and all(r.w is not None and r.w > smo.TAU for r in svs)
+    got = {(r.bucket, r.vec_id): r.w for r in svs}
+    for b in (0, 1):
+        rows = sorted(base.filter(F.col("bucket") == b).collect(),
+                      key=lambda r: r.vec_id)
+        X = np.stack([np.asarray(r.embedding, dtype=np.float64)
+                      for r in rows])
+        model = smo.train_svc(X, np.asarray([r.label for r in rows]),
+                              gamma=2.0)
+        w = np.zeros(model.n_sv)
+        for idx, coef in model.pair_coefs.values():
+            for i, c in zip(idx, coef):
+                w[i] = max(w[i], abs(c))
+        want = {(b, rows[i].vec_id): w[p]
+                for p, i in enumerate(model.sv_orig_idx)}
+        assert {key: v for key, v in got.items() if key[0] == b} == want
 
 
 def test_trainer_err_rows(spark, emb):

@@ -35,30 +35,6 @@ def test_kkt_and_box_constraints():
     assert yg[up].max() - yg[low].min() < 2e-3
 
 
-def test_shrinking_reaches_same_kkt_optimum():
-    # shrinking may take a different iteration path but must land on an
-    # eps-KKT point of the FULL problem with the same decision geometry
-    rng = np.random.default_rng(4)
-    X = rng.normal(size=(400, 8))
-    y = np.where(X[:, 0] + 0.3 * rng.normal(size=400) > 0, 1.0, -1.0)
-    C = 1.0
-    K = rbf_kernel(X, X, gamma=1 / 8)
-    a_ns, rho_ns = smo_solve(K, y, C=C, shrinking=False)
-    a_s, rho_s = smo_solve(K, y, C=C, shrinking=True)
-    for a in (a_ns, a_s):
-        assert (a >= -1e-9).all() and (a <= C + 1e-9).all()
-        assert abs(np.dot(a, y)) < 1e-6
-        grad = (y[:, None] * K * y[None, :]) @ a - 1.0
-        yg = -y * grad
-        up = ((y > 0) & (a < C - 1e-9)) | ((y < 0) & (a > 1e-9))
-        low = ((y < 0) & (a < C - 1e-9)) | ((y > 0) & (a > 1e-9))
-        assert yg[up].max() - yg[low].min() < 2e-3
-    # same decision values up to solver tolerance
-    d_ns = K @ (a_ns * y) - rho_ns
-    d_s = K @ (a_s * y) - rho_s
-    assert (np.sign(d_ns) == np.sign(d_s)).mean() > 0.99
-
-
 def test_separable_blobs_multiclass():
     rng = np.random.default_rng(0)
     X = np.vstack([rng.normal(loc=3 * c, scale=0.5, size=(60, 4))
@@ -88,37 +64,10 @@ def test_determinism():
     assert np.array_equal(m1.predict(X), m2.predict(X))
 
 
-def test_fit_global_distributed_matches_serial(spark, sf_dir):
-    """The pair-parallel global trainer matches smo.train_svc up to
-    kernel-evaluation float noise (per-pair RBF vs sliced full Gram
-    differ in the last ulp, so duals can differ at ~1e-6)."""
-    import numpy as np
-    from parallel_svms_spark.io.sources import load_table
-    from parallel_svms_spark.ml import smo, trainer
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(200).localCheckpoint()
-    rows = sorted(emb.collect(), key=lambda r: r.vec_id)
-    X = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in rows])
-    y = np.asarray([r.label for r in rows])
-    serial = smo.train_svc(X, y, gamma=2.0)
-    dist = trainer.fit_global_distributed(emb, gamma=2.0)
-    assert list(dist.classes) == list(serial.classes)
-    assert dist.n_sv == serial.n_sv
-    assert set(dist.rhos) == set(serial.rhos)
-    for pair in serial.rhos:
-        assert abs(dist.rhos[pair] - serial.rhos[pair]) < 1e-3
-        si, sc = serial.pair_coefs[pair]
-        di, dc = dist.pair_coefs[pair]
-        assert len(dc) == len(sc)
-    # near-identical predictions (boundary-tie flips only)
-    agree = float((dist.predict(X) == serial.predict(X)).mean())
-    assert agree >= 0.97
-
-
 def test_fast_path_bitwise_equals_general_loop():
     """r10 optimization pin: smo_solve's buffer-reusing no-shrink fast
     path returns the BITWISE-identical (alpha, rho) the original loop
-    (_smo_solve_general, shrinking=False) produces — same ops, same
+    (_smo_solve_general) produces — same ops, same
     operand order, over a battery spanning converged and
     iteration-capped duals, both kernels, and C extremes."""
     import numpy as np
@@ -136,7 +85,7 @@ def test_fast_path_bitwise_equals_general_loop():
         K = smo.KERNELS["rbf" if trial % 2 else "linear"](X, X, 1.0 / d)
         C = float(rng.choice([0.5, 1.0, 10.0]))
         mi = max(10_000, min(100 * n, 250_000))
-        a_ref, r_ref = smo._smo_solve_general(K, y, C, 1e-3, mi, False)
+        a_ref, r_ref = smo._smo_solve_general(K, y, C, 1e-3, mi)
         a_new, r_new = smo.smo_solve(K, y, C=C)
         assert np.array_equal(a_ref, a_new)
         assert r_ref == r_new
@@ -178,3 +127,87 @@ def test_native_loop_bitwise_equals_numpy_fast_path():
         assert r_np == r_c
         checked += 1
     assert checked >= 8
+
+
+def test_train_svc_threads_equal_serial_pair_loop(monkeypatch):
+    """train_svc solves its one-vs-one pairs on a thread pool; the model
+    must be bitwise what a serial loop of smo_solve over the sliced
+    Gram matrix gives. Eight cores are reported whatever the host has,
+    so the pool really runs the 45 duals concurrently."""
+    from parallel_svms_spark.ml import smo
+
+    monkeypatch.setattr(smo.os, "sched_getaffinity",
+                        lambda pid: set(range(8)), raising=False)
+    assert smo._n_cpus() == 8
+    rng = np.random.default_rng(12)
+    n, d, n_cls = 1500, 16, 10
+    centers = rng.standard_normal((n_cls, d)) * 2.0
+    y = rng.integers(0, n_cls, size=n)
+    X = centers[y] + rng.standard_normal((n, d))
+    gamma = 1.0 / d
+    model = train_svc(X, y, gamma=gamma)
+
+    K = rbf_kernel(X, X, gamma)
+    classes = np.unique(y)
+    want = {}
+    sv_mask = np.zeros(n, dtype=bool)
+    for a in range(n_cls):
+        for b in range(a + 1, n_cls):
+            sel = np.flatnonzero((y == classes[a]) | (y == classes[b]))
+            ys = np.where(y[sel] == classes[a], 1.0, -1.0)
+            alpha, rho = smo_solve(K[np.ix_(sel, sel)], ys)
+            nz = alpha > smo.TAU
+            want[(a, b)] = (sel[nz], alpha[nz] * ys[nz], rho)
+            sv_mask[sel[nz]] = True
+    assert np.array_equal(model.sv_orig_idx, np.flatnonzero(sv_mask))
+    assert list(model.rhos) == list(want)
+    for pair, (orig, coef, rho) in want.items():
+        idx, got = model.pair_coefs[pair]
+        assert np.array_equal(model.sv_orig_idx[idx], orig)
+        assert np.array_equal(got, coef)
+        assert model.rhos[pair] == rho
+
+
+def test_native_load_is_thread_safe(monkeypatch):
+    """Threads that call _smo_native.load() while another is still
+    opening the library wait for its handle: none may see None and
+    fall back to numpy. A slow dlopen widens the window."""
+    import ctypes
+    import sys
+    import threading
+    import time
+
+    import pytest
+    from parallel_svms_spark.ml import _smo_native
+
+    if _smo_native.load() is None:
+        pytest.skip("no native build on this host (numpy fallback active)")
+    real_cdll = ctypes.CDLL
+
+    def slow_cdll(*args, **kw):
+        time.sleep(0.2)
+        return real_cdll(*args, **kw)
+
+    monkeypatch.setattr(_smo_native, "_lib", None)
+    monkeypatch.setattr(_smo_native, "_tried", False)
+    monkeypatch.setattr(_smo_native.ctypes, "CDLL", slow_cdll)
+    barrier = threading.Barrier(8, timeout=30)
+    got = [None] * 8
+
+    def call(i):
+        barrier.wait()
+        got[i] = _smo_native.load()
+
+    threads = [threading.Thread(target=call, args=(i,)) for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert got[0] is not None
+    assert all(h is got[0] for h in got)
