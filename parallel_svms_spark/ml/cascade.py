@@ -8,27 +8,38 @@ k/2^ℓ — Midcascade.java:6,126-127); the final job's single reducer
 retrains on the surviving SVs and writes the model
 (Lastcascade.java:109-144).
 
-Spark rewrite: ONE session, a driver loop over DataFrame stages; the
-stage directories become a `bucket` column; `localCheckpoint` replaces
-the per-job HDFS materialization (lineage truncation only — SURVEY
-§4.3.3).
+Spark rewrite: the merge tree is a fixed binary tree (Graf et al.,
+NIPS 2004), so any subtree computes the same thing wherever it runs.
+Layer 0 is one grouped-map stage with one task per bucket (its size is
+unknown until it runs). Once a layer's SVs fit one bucket's row cap —
+or only the final retrain is left — a single grouped-map task runs
+every remaining merge and the final retrain in process, bucket by
+bucket, with the same per-bucket function. Layers in between (the cap
+off, or more SVs than it) run as their own one-task-per-bucket stages.
+The stage directories become a ``bucket`` column; ``localCheckpoint``
+of each stage's output replaces the per-job HDFS materialization
+(lineage truncation only — SURVEY §4.3.3).
 
-Scale: per-layer shuffle volume halves (SVs only), so total motion is
-≤ 2× layer-1 SV bytes regardless of depth; each training group stays
-subset-sized. For 100 TB pick k so that |subset| ≈ 10⁴ rows; layers
-= log₂k jobs of decreasing size, all cluster-parallel until the tip,
-where a bucket task's one-vs-one pairs still run on threads.
+Scale: each training group stays subset-sized, and no dual is larger
+than one capped bucket: the tail collapses only when all its rows are
+within the cap. For 100 TB pick k so that |subset| ≈ 10⁴ rows; layer 0
+is cluster-parallel, and a bucket task's one-vs-one pairs run on
+threads.
 """
 
 from __future__ import annotations
 
+import json
+
+import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from parallel_svms_spark.ml import trainer
 from parallel_svms_spark.ml.smo import SVCModel
 from parallel_svms_spark.operators.partitioning import balanced_buckets
+
+SV_COLUMNS = ["bucket", "vec_id", "label", "embedding", "w"]
 
 
 def _validate_k(k: int) -> None:
@@ -38,49 +49,36 @@ def _validate_k(k: int) -> None:
         raise ValueError(f"k must be a power of two ≥ 2, got {k}")
 
 
-def _cap_bucket_rows(df: DataFrame, cap: int) -> DataFrame:
-    """Bound every bucket's dual size at ``cap`` rows — the cascade's
-    graceful worst case (VERDICT r6 #2). With adversarial labels that
-    shed NO support vectors, merged buckets approach corpus size and
-    the per-pair kernel matrices go quadratic in memory (the measured
-    OOM at 100k degenerate-label rows, BASELINE.md 20×/50× row); past
-    the cap the layer degrades in ACCURACY (a documented subsample of
-    the merged SV set) instead of crashing.
+def _merge_tail(svs: DataFrame, n_buckets: int, fit_kw: dict
+                ) -> DataFrame:
+    """Every merge after a layer of ``n_buckets`` buckets (``svs``: its
+    SV rows, in SV_COLUMNS), down to and including the final retrain,
+    in ONE grouped-map task: pair-merge (bucket // 2), train each
+    merged bucket with ``trainer.train_bucket``, repeat until one
+    bucket is left. Emits the final SV rows, its model row and every
+    bucket's stat row, with ``layer`` counted from the tail's first
+    merge.
 
-    Selection is round-robin STRATIFIED by label: rows rank first
-    within (bucket, label), then across the bucket by that per-class
-    rank — so the kept ``cap`` rows take one row per class per round
-    and no class is starved even when the bucket is 99% one label.
-    WITHIN a class the order is accuracy-aware when the frame carries
-    a ``w`` column (the max dual α that ``trainer.fit_buckets`` emits
-    on every SV row): highest-|α| rows — the C-bound and tight-margin
-    rows that actually carry the decision boundary — rank first, so
-    the cap sheds the flattest duals, not a random coin's pick
-    (VERDICT r7 #6). Rows that were never trained (layer-0 input)
-    have no ``w`` and fall back to the deterministic md5 coin.
-    Either way re-runs reproduce the same
-    subsample (hash/dual of vec_id, no RNG state); buckets already at
-    or under the cap pass through IDENTICALLY (every row's rank ≤
-    cap), so the well-behaved path — real data shedding SVs per layer
-    — never observes the cap.
-
-    Scale shape: two window passes partitioned by (bucket[, label]) —
-    per-task state is one bucket, the same working set the training
-    task for that bucket holds anyway; no new exchange class.
+    It runs in a Spark task, not on the driver: Python workers pin
+    BLAS to one thread, as every bucket task is, so the Gram matrices
+    round exactly as in a layer-per-stage run.
     """
-    h = F.md5(F.col("vec_id").cast("string"))
-    by_alpha = ([F.col("w").desc_nulls_last()]
-                if "w" in df.columns else [])
-    out = (df.withColumn("__h", h)
-           .withColumn("__rn", F.row_number().over(
-               W.partitionBy("bucket", "label")
-               .orderBy(*by_alpha, "__h", "vec_id")))
-           .withColumn("__rk", F.row_number().over(
-               W.partitionBy("bucket")
-               .orderBy("__rn", "__h", "vec_id")))
-           .filter(F.col("__rk") <= int(cap))
-           .drop("__h", "__rn", "__rk"))
-    return out
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        n, layer, extra = n_buckets, 0, []
+        while n > 1 and len(pdf):
+            pdf = pdf.assign(bucket=pdf["bucket"] // 2)
+            n //= 2
+            fits = [trainer.train_bucket(g, with_model=n == 1, **fit_kw)
+                    for _, g in pdf.groupby("bucket", sort=True)]
+            for _, rows in fits:
+                extra += [{**r, "layer": layer} for r in rows]
+            pdf = pd.concat([sv for sv, _ in fits], ignore_index=True)
+            layer += 1
+        return trainer.fit_rows(pdf, extra)
+
+    # one partition (narrow, no exchange) under a constant group key
+    return (svs.coalesce(1).groupBy(F.lit(0).alias("tail"))
+            .applyInPandas(run, trainer.FIT_SCHEMA))
 
 
 def cascade_train(df: DataFrame, k: int, C: float = 1.0,
@@ -91,83 +89,89 @@ def cascade_train(df: DataFrame, k: int, C: float = 1.0,
                   ) -> tuple[SVCModel, DataFrame]:
     """Train cascade SVM; returns (final model, final SV DataFrame).
 
-    Every layer and the final retrain is one ``trainer.fit_buckets``
-    call: one task per bucket, whose one-vs-one pairs ``smo.train_svc``
-    solves on threads — so the narrow tip (2 buckets, then 1) still
-    uses the task's cores.
+    Layer 0 is one ``trainer.fit_buckets`` stage, one task per bucket.
+    Its stat rows give the layer's SV count without a count job; if
+    that count is within ``max_rows_per_bucket``, one task runs the
+    rest of the tree (``_merge_tail``). Otherwise the next layer is
+    another one-task-per-bucket stage, and so on; when two buckets are
+    left, the final merge and retrain run in one task either way.
+    With the cap off (``None``) only that final retrain is one task.
+    Inside every task ``smo.train_svc`` solves the one-vs-one pairs on
+    threads, so the narrow tip still uses the task's cores. Same SVs
+    and model as training every layer as its own stage.
 
     df columns: vec_id, label, embedding. Pass ``stats_out={}`` to
-    receive ``{"layers": [(n_buckets, n_rows), ...]}`` — the row count
-    entering each layer (and the surviving-SV count after each), the
-    observable behind the paper's per-layer SV-shrinkage claim (PDF
-    slide 23). When the cap is active, ``stats_out`` additionally
-    receives ``"shed"`` — the rows the cap ACTUALLY dropped per layer
+    receive ``{"layers": [(n_buckets, n_rows), ...], "shed": [...]}``
+    — per layer (final retrain included), the rows that trained after
+    the cap, the observable behind the paper's per-layer SV-shrinkage
+    claim (PDF slide 23), and the rows the cap ACTUALLY dropped
     (ADVICE r7: callers see when the default changed their result).
-    Stats cost one count per layer (plus one extra materialization
-    per layer for ``"shed"``), paid only when they are requested.
+    Both come from the fits' stat rows, at no extra job.
 
     ``max_rows_per_bucket`` bounds every layer's per-bucket dual at
-    that many rows (see ``_cap_bucket_rows``) — the zero-SV-shedding
-    worst case then degrades in accuracy instead of OOMing; at the
-    default 20k the largest per-pair kernel is ~(2/N_cls·20k)² doubles
-    (≈128 MB at 10 classes). **NOTE (r7 default change): any caller
-    whose layer buckets exceed 20k rows gets a documented deterministic
-    subsample instead of the full dual** — pass ``None`` to disable the
-    cap (the reference semantics: Lastcascade.java:109-144 retrains
-    whatever survives), and read ``stats_out["shed"]`` to see whether
-    the cap fired at all. A merge layer is shed lowest-|α| first,
-    using the ``w`` the previous layer's fit emitted; layer-0 rows were
-    never trained, so the first cap is the stratified coin.
+    that many rows (see ``trainer.cap_bucket_rows``) — the
+    zero-SV-shedding worst case then degrades in accuracy instead of
+    OOMing; at the default 20k the largest per-pair kernel is
+    ~(2/N_cls·20k)² doubles (≈128 MB at 10 classes). **NOTE (r7
+    default change): any caller whose layer buckets exceed 20k rows
+    gets a documented deterministic subsample instead of the full
+    dual** — pass ``None`` to disable the cap (the reference
+    semantics: Lastcascade.java:109-144 retrains whatever survives),
+    and read ``stats_out["shed"]`` to see whether the cap fired at
+    all. A merge layer is shed lowest-|α| first, using the ``w`` the
+    previous layer's fit emitted; layer-0 rows were never trained, so
+    the first cap is the stratified coin.
     """
     _validate_k(k)
-    track_shed = stats_out is not None and max_rows_per_bucket is not None
+    cap = max_rows_per_bucket
+    fit_kw = dict(C=C, gamma=gamma, kernel=kernel, max_rows_per_bucket=cap)
+    layers: list[tuple[int, int]] = []
     shed: list[int] = []
 
-    def _cap(frame: DataFrame) -> DataFrame:
-        nonlocal n_pre
-        if max_rows_per_bucket is None:
-            return frame
-        if track_shed:
-            frame = (frame.localCheckpoint() if checkpoint
-                     else frame.cache())
-            n_pre = frame.count()
-        return _cap_bucket_rows(frame, max_rows_per_bucket)
-
-    def _materialize(frame: DataFrame, n_buckets: int) -> DataFrame:
-        # truncate lineage between layers (the reference got this
+    def _materialize(frame: DataFrame) -> DataFrame:
+        # truncate lineage between stages (the reference got this
         # implicitly by materializing each job to HDFS); plain cache
         # otherwise
-        frame = frame.localCheckpoint() if checkpoint else frame.cache()
-        if stats_out is not None:
-            n_rows = frame.count()
-            stats_out["layers"].append((n_buckets, n_rows))
-            if track_shed:
-                shed.append(n_pre - n_rows)
-        return frame
+        return frame.localCheckpoint() if checkpoint else frame.cache()
 
-    n_pre = 0
-    if stats_out is not None:
-        stats_out["layers"] = []
-        if track_shed:
-            stats_out["shed"] = shed
+    def _read_stats(rows: list, n_buckets: int) -> int:
+        # per-layer totals of a fit's stat rows, whose first layer has
+        # n_buckets buckets; returns the last layer's SV count
+        totals: dict[int, list[int]] = {}
+        for r in rows:
+            if r.kind == "stat":
+                t = totals.setdefault(r.layer, [0, 0, 0])
+                t[0] += r.n_in - r.n_shed
+                t[1] += r.n_shed
+                t[2] += r.n_sv
+        for layer in sorted(totals):
+            layers.append((n_buckets >> layer, totals[layer][0]))
+            shed.append(totals[layer][1])
+        return totals[max(totals)][2] if totals else 0
+
     n_buckets = k
-    cur = _materialize(_cap(balanced_buckets(df, k)), n_buckets)
-    while n_buckets > 1:
-        fit = trainer.fit_buckets(cur, C=C, gamma=gamma, kernel=kernel,
-                                  k=n_buckets)
-        svs = (fit.filter(fit.kind == "sv")
-               .select("bucket", "vec_id", "label", "embedding", "w"))
-        # pair-merge, then re-cap: two ≤cap buckets fused into one
-        # ≤2·cap bucket shrink back to ≤cap before training
-        cur = _cap(svs.withColumn(
-            "bucket", F.floor(F.col("bucket") / 2).cast("int")))
+    fit = _materialize(trainer.fit_buckets(balanced_buckets(df, k), k=k,
+                                           **fit_kw))
+    while True:
+        n_sv = _read_stats(fit.filter(fit.kind == "stat").collect(),
+                           n_buckets)
+        svs = fit.filter(fit.kind == "sv").select(*SV_COLUMNS)
+        if n_buckets == 2 or (cap is not None and n_sv <= cap):
+            break
+        # pair-merge into a stage of its own; each task re-caps its
+        # ≤2·cap merged rows to ≤cap before training
         n_buckets //= 2
-        cur = _materialize(cur, n_buckets)
-    # final retrain on surviving SVs (Lastcascade.java:109-144), in one
-    # task like the reference's single reducer
-    fit = trainer.fit_buckets(cur.withColumn("bucket", F.lit(0)),
-                              C=C, gamma=gamma, kernel=kernel,
-                              with_model=True, k=1)
-    fit = fit.localCheckpoint() if checkpoint else fit.cache()
-    model = trainer.collect_models(fit)[0]
+        fit = _materialize(trainer.fit_buckets(
+            svs.withColumn("bucket", F.floor(F.col("bucket") / 2)
+                           .cast("int")),
+            k=n_buckets, **fit_kw))
+    # the remaining merges and the final retrain (Lastcascade.java:
+    # 109-144) in one task, like the reference's single reducer
+    fit = _materialize(_merge_tail(svs, n_buckets, fit_kw))
+    meta = fit.filter(fit.kind != "sv").collect()
+    _read_stats(meta, n_buckets // 2)
+    if stats_out is not None:
+        stats_out.update(layers=layers, shed=shed)
+    model = SVCModel.from_dict(json.loads(
+        next(r.model_json for r in meta if r.kind == "model")))
     return model, trainer.svs_only(fit)

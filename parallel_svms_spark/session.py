@@ -1,6 +1,8 @@
 """SparkSession factory with scale-appropriate defaults.
 
-Local testing runs ``local[$SPARK_GRAFT_CPUS]``; the same config block
+Local runs use ``local[$SPARK_GRAFT_CPUS]`` (default: the cores this
+process may run on) and a ``$SPARK_GRAFT_DRIVER_MEM`` driver heap
+(default: half of physical memory); the same config block
 is what we would ship to a 1000-executor cluster (AQE on, adaptive
 skew-join, Arrow for the Pandas-UDF path, UTC session TZ so results
 hash-match a UTC-naive DuckDB oracle).
@@ -13,6 +15,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_resources(environ, n_cpus: int, phys_bytes: int
+                    ) -> tuple[int, str]:
+    """(local master core count, driver heap) for ``get_spark``.
+
+    ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` win when set;
+    otherwise the cores this process may run on and half of physical
+    memory (whole gigabytes, at least 1g).
+    """
+    cpus = int(environ.get("SPARK_GRAFT_CPUS") or n_cpus)
+    mem = (environ.get("SPARK_GRAFT_DRIVER_MEM")
+           or f"{max(1, phys_bytes // 2 // 2**30)}g")
+    return cpus, mem
+
+
 def get_spark(app_name: str = "parallel_svms_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the session.
@@ -21,9 +37,11 @@ def get_spark(app_name: str = "parallel_svms_spark",
     on a real cluster this would be ~2-3× total executor cores; AQE
     coalesces downward at runtime either way.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_mem = local_resources(
+        os.environ, len(os.sched_getaffinity(0)),
+        os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE"))
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus)
+        shuffle_partitions = cpus
     builder = (
         SparkSession.builder
         .master(f"local[{cpus}]")
@@ -40,7 +58,7 @@ def get_spark(app_name: str = "parallel_svms_spark",
         # reader otherwise rejects (read as long, loader converts ns→µs
         # matching DuckDB's truncation).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

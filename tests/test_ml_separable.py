@@ -57,6 +57,22 @@ def blobs(spark, blobs_np):
 
 
 @pytest.fixture(scope="module")
+def degenerate(spark):
+    """Near-random labels: buckets shed almost no SVs, so a cap of 60
+    fires on layer 0 and on every merge layer."""
+    rng = np.random.default_rng(11)
+    n, dim, n_cls = 800, 8, 4
+    X = rng.standard_normal((n, dim)).astype(np.float32)
+    y = rng.integers(0, n_cls, size=n)
+    rows = [(int(i), int(y[i]), [float(v) for v in X[i]])
+            for i in range(n)]
+    df = spark.createDataFrame(
+        rows, "vec_id long, label int, embedding array<float>") \
+        .repartition(8).localCheckpoint()
+    return df, n_cls, dim
+
+
+@pytest.fixture(scope="module")
 def single_model_acc(blobs_np):
     """The serial baseline every parallel variant is measured against:
     one SMO solve over the full fixture (driver-side numpy)."""
@@ -103,20 +119,12 @@ def test_cascade_cap_is_inactive_under_the_bound(blobs):
         == sorted(r.vec_id for r in usvs.select("vec_id").collect())
 
 
-def test_cascade_cap_bounds_degenerate_layers_and_keeps_classes(spark):
+def test_cascade_cap_bounds_degenerate_layers_and_keeps_classes(degenerate):
     """The zero-shedding worst case (near-random labels) with a tiny
     cap: every layer's per-bucket row count stays ≤ cap, the result is
     deterministic across runs, and the label-stratified subsample
     keeps every class alive in the surviving set."""
-    rng = np.random.default_rng(11)
-    n, dim, n_cls = 800, 8, 4
-    X = rng.standard_normal((n, dim)).astype(np.float32)
-    y = rng.integers(0, n_cls, size=n)
-    rows = [(int(i), int(y[i]), [float(v) for v in X[i]])
-            for i in range(n)]
-    df = spark.createDataFrame(
-        rows, "vec_id long, label int, embedding array<float>") \
-        .repartition(8).localCheckpoint()
+    df, n_cls, dim = degenerate
     cap = 60
     stats: dict = {}
     model, svs = cascade_train(df, k=4, gamma=1.0 / dim,
@@ -161,14 +169,14 @@ def test_cascade_cap_weight_beats_coin(spark):
     rows (the ``w`` fit_buckets emits on SV rows) must keep a set that
     trains an equal-or-better model than the stratified md5 coin —
     the duals know which rows carry the boundary; the coin does not.
-    Both orders cap the same trained merge layer; the coin order is
-    that layer with ``w`` dropped (as layer-0 rows, which have no
-    ``w``, are capped). Noisier blobs than the envelope fixture so
-    buckets produce MORE SVs than the cap and the shed decision
-    actually matters."""
+    Both orders cap the same trained merge layer with
+    ``trainer.cap_bucket_rows``; the coin order is that layer with
+    ``w`` dropped (as layer-0 rows, which have no ``w``, are capped).
+    Noisier blobs than the envelope fixture so buckets produce MORE
+    SVs than the cap and the shed decision actually matters."""
+    import pandas as pd
     from pyspark.sql import functions as F
 
-    from parallel_svms_spark.ml.cascade import _cap_bucket_rows
     from parallel_svms_spark.operators.partitioning import balanced_buckets
 
     X, y = _blobs(n=1200, n_classes=4, dim=8, spread=4.0, std=2.0,
@@ -179,30 +187,152 @@ def test_cascade_cap_weight_beats_coin(spark):
         rows, "vec_id long, label int, embedding array<float>") \
         .repartition(8).localCheckpoint()
     cap = 80
-    layer0 = _cap_bucket_rows(balanced_buckets(df, 4), cap).localCheckpoint()
-    fit = trainer.fit_buckets(layer0, gamma=1.0 / 8, k=4)
+    fit = trainer.fit_buckets(balanced_buckets(df, 4), gamma=1.0 / 8, k=4,
+                              max_rows_per_bucket=cap)
     merged = (fit.filter("kind = 'sv'")
               .select(F.floor(F.col("bucket") / 2).cast("int")
                       .alias("bucket"), "vec_id", "label", "embedding", "w")
-              .localCheckpoint())
+              .toPandas())
     # the cap must actually bind on the merge layer or the test proves
     # nothing
-    sizes = [r[1] for r in merged.groupBy("bucket").count().collect()]
+    sizes = merged.groupby("bucket").size().tolist()
     assert max(sizes) > cap, sizes
-    kept_w = _cap_bucket_rows(merged, cap).collect()
-    kept_c = _cap_bucket_rows(merged.drop("w"), cap).collect()
+
+    def capped(frame):
+        return pd.concat([trainer.cap_bucket_rows(g, cap)
+                          for _, g in frame.groupby("bucket")])
+
+    kept_w, kept_c = capped(merged), capped(merged.drop(columns="w"))
     # ... and the ordering must actually ENGAGE: the two orders keep
     # different sets (an identical set would mean w was never used)
-    assert {r.vec_id for r in kept_w} != {r.vec_id for r in kept_c}
+    assert set(kept_w["vec_id"]) != set(kept_c["vec_id"])
 
     def acc(kept):
         model = smo.train_svc(
-            np.asarray([r.embedding for r in kept], dtype=np.float64),
-            np.asarray([r.label for r in kept]), gamma=1.0 / 8)
+            np.stack(kept["embedding"].to_numpy()).astype(np.float64),
+            kept["label"].to_numpy(), gamma=1.0 / 8)
         return float((model.predict(X.astype(np.float64)) == y).mean())
 
     acc_w, acc_c = acc(kept_w), acc(kept_c)
     assert acc_w >= acc_c, (acc_w, acc_c)
+
+
+def _window_cap(df, cap):
+    """The cap as two window passes over (bucket[, label]) — the Spark
+    form the pandas ``trainer.cap_bucket_rows`` replaced, kept here as
+    its reference."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    h = F.md5(F.col("vec_id").cast("string"))
+    by_alpha = ([F.col("w").desc_nulls_last()]
+                if "w" in df.columns else [])
+    return (df.withColumn("__h", h)
+            .withColumn("__rn", F.row_number().over(
+                W.partitionBy("bucket", "label")
+                .orderBy(*by_alpha, "__h", "vec_id")))
+            .withColumn("__rk", F.row_number().over(
+                W.partitionBy("bucket")
+                .orderBy("__rn", "__h", "vec_id")))
+            .filter(F.col("__rk") <= int(cap))
+            .drop("__h", "__rn", "__rk"))
+
+
+def test_pandas_cap_keeps_the_window_caps_rows(degenerate):
+    """``trainer.cap_bucket_rows`` keeps exactly the rows of the window
+    cap — on layer-0 rows (coin order), and on a merge layer whose
+    ``w`` mixes duals with nulls (nulls last) — and the fit's stat rows
+    count exactly the rows the window cap dropped."""
+    from pyspark.sql import functions as F
+
+    from parallel_svms_spark.operators.partitioning import balanced_buckets
+
+    df, _, dim = degenerate
+    cap = 60
+
+    def kept_by_bucket(frame):
+        pdf = frame.toPandas()
+        return {b: sorted(trainer.cap_bucket_rows(g, cap)["vec_id"])
+                for b, g in pdf.groupby("bucket")}
+
+    def window_by_bucket(frame):
+        out: dict = {}
+        for r in _window_cap(frame, cap).select("bucket", "vec_id") \
+                .collect():
+            out.setdefault(r.bucket, []).append(r.vec_id)
+        return {b: sorted(v) for b, v in out.items()}
+
+    layer0 = balanced_buckets(df, 4).localCheckpoint()
+    assert kept_by_bucket(layer0) == window_by_bucket(layer0)
+
+    fit = trainer.fit_buckets(layer0, gamma=1.0 / dim, k=4,
+                              max_rows_per_bucket=cap).localCheckpoint()
+    sizes = {r.bucket: r["count"]
+             for r in layer0.groupBy("bucket").count().collect()}
+    dropped = {b: sizes[b] - len(v)
+               for b, v in window_by_bucket(layer0).items()}
+    shed = {r.bucket: r.n_shed
+            for r in fit.filter("kind = 'stat'").collect()}
+    assert shed == dropped and min(shed.values()) > 0, (shed, dropped)
+
+    merged = (fit.filter("kind = 'sv'")
+              .select(F.floor(F.col("bucket") / 2).cast("int")
+                      .alias("bucket"), "vec_id", "label", "embedding",
+                      F.when(F.col("vec_id") % 3 != 0, F.col("w"))
+                      .alias("w"))
+              .localCheckpoint())
+    assert kept_by_bucket(merged) == window_by_bucket(merged)
+
+
+def _layer_by_layer(df, k, gamma, cap):
+    """Reference cascade: every layer, the final retrain included, as
+    its own ``fit_buckets`` stage. Returns (model, SV ids, layers,
+    shed) in ``cascade_train``'s ``stats_out`` format."""
+    from pyspark.sql import functions as F
+
+    from parallel_svms_spark.operators.partitioning import balanced_buckets
+
+    n = k
+    fit = trainer.fit_buckets(balanced_buckets(df, k), gamma=gamma, k=k,
+                              max_rows_per_bucket=cap).localCheckpoint()
+    fits = [(n, fit)]
+    while n > 1:
+        n //= 2
+        merged = fit.filter("kind = 'sv'").select(
+            F.floor(F.col("bucket") / 2).cast("int").alias("bucket"),
+            "vec_id", "label", "embedding", "w")
+        fit = trainer.fit_buckets(merged, gamma=gamma, k=n,
+                                  with_model=n == 1,
+                                  max_rows_per_bucket=cap).localCheckpoint()
+        fits.append((n, fit))
+    layers, shed = [], []
+    for n, f in fits:
+        stat = f.filter("kind = 'stat'").agg(
+            F.sum(F.col("n_in") - F.col("n_shed")), F.sum("n_shed")) \
+            .collect()[0]
+        layers.append((n, int(stat[0])))
+        shed.append(int(stat[1]))
+    ids = sorted(r.vec_id for r in trainer.svs_only(fit).collect())
+    return trainer.collect_models(fit)[0], ids, layers, shed
+
+
+@pytest.mark.parametrize("cap", [60, 20000, None])
+@pytest.mark.parametrize("k", [2, 4, 8])
+def test_cascade_tail_equals_layer_by_layer(degenerate, k, cap):
+    """Running the merge tail in one task computes the same tree: the
+    same SV ids, the same model (``to_dict``) and the same per-layer
+    stats as a stage per layer. Cap 60 fires on layer 0 and every
+    merge layer (stages, then a final-retrain tail); 20000 never fires
+    (all merges in the tail); None is the cap off."""
+    df, _, dim = degenerate
+    stats: dict = {}
+    model, svs = cascade_train(df, k=k, gamma=1.0 / dim,
+                               max_rows_per_bucket=cap, stats_out=stats)
+    ref, ref_ids, layers, shed = _layer_by_layer(df, k, 1.0 / dim, cap)
+    assert sorted(r.vec_id for r in svs.collect()) == ref_ids
+    assert model.to_dict() == ref.to_dict()
+    assert stats == {"layers": layers, "shed": shed}
+    assert (cap == 60) == (sum(shed) > 0)
 
 
 def test_cascade_shed_log_zero_when_cap_inactive(blobs):

@@ -96,6 +96,23 @@ def test_fit_buckets_sv_rows_carry_max_dual_weight(spark, emb):
         assert {key: v for key, v in got.items() if key[0] == b} == want
 
 
+def test_fit_buckets_one_partition_per_bucket(spark, emb):
+    # with k given, partition i holds exactly bucket i (one training
+    # task per bucket) and the grouped map reuses that single exchange
+    from parallel_svms_spark.operators.partitioning import balanced_buckets
+    fit = trainer.fit_buckets(balanced_buckets(emb, 4), gamma=2.0, k=4)
+    plan = fit._jdf.queryExecution().executedPlan().toString()
+    below = plan.split("FlatMapGroupsInPandas", 1)[1]
+    assert below.count("Exchange") == 1, plan
+    rows = fit.select("bucket", "kind",
+                      F.spark_partition_id().alias("pid")).collect()
+    assert {r.bucket for r in rows} == {0, 1, 2, 3}
+    assert all(r.pid == r.bucket for r in rows)
+    # ... and each bucket reports itself once in a stat row
+    stats = [r for r in rows if r.kind == "stat"]
+    assert sorted(r.bucket for r in stats) == [0, 1, 2, 3]
+
+
 def test_trainer_err_rows(spark, emb):
     from parallel_svms_spark.operators.partitioning import balanced_buckets
     fit = trainer.fit_buckets(balanced_buckets(emb, 2), eval_train=True)

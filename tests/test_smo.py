@@ -168,6 +168,29 @@ def test_train_svc_threads_equal_serial_pair_loop(monkeypatch):
         assert model.rhos[pair] == rho
 
 
+def test_rbf_gram_blocks_bitwise_equal_rbf_kernel():
+    """train_svc's Gram runs its elementwise passes in row blocks on
+    the pair pool; every entry must be bitwise rbf_kernel's, for sizes
+    under, at and across the block boundary, with more threads than
+    cores switching often."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from parallel_svms_spark.ml import smo
+
+    rng = np.random.default_rng(5)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            for n in (1, 7, 256, 257, 2100):
+                X = rng.standard_normal((n, 24)) * 1.5
+                assert np.array_equal(smo._rbf_gram(X, 1.0 / 24, pool),
+                                      rbf_kernel(X, X, 1.0 / 24)), n
+    finally:
+        sys.setswitchinterval(interval)
+
+
 def test_native_load_is_thread_safe(monkeypatch):
     """Threads that call _smo_native.load() while another is still
     opening the library wait for its handle: none may see None and
