@@ -15,8 +15,6 @@ scores map-side (no shuffle at all).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from parallel_svms_spark.ml import trainer
@@ -41,31 +39,5 @@ def bagging_predict(df: DataFrame, models: dict[int, SVCModel],
                     features_col: str = "embedding") -> DataFrame:
     """Majority vote over the k models; ties → lowest class label
     (deterministic — the paper does not specify a tie rule)."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(
-        {b: m.to_dict() for b, m in models.items()})
-    has_label = label_col in df.columns
-    cols = [id_col, features_col] + ([label_col] if has_label else [])
-    schema = f"{id_col} long, " + (f"{label_col} int, " if has_label else "") \
-             + "pred int"
-
-    def vote(it):
-        ms = [SVCModel.from_dict(d) for _, d in sorted(bc.value.items())]
-        all_classes = np.unique(np.concatenate([m.classes for m in ms]))
-        cls_pos = {c: i for i, c in enumerate(all_classes)}
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[features_col].to_numpy()).astype(np.float64)
-            votes = np.zeros((len(X), len(all_classes)), dtype=np.int64)
-            for m in ms:
-                p = m.predict(X)
-                votes[np.arange(len(X)), [cls_pos[c] for c in p]] += 1
-            pred = all_classes[np.argmax(votes, axis=1)]  # argmax→lowest tie
-            out = {id_col: pdf[id_col].to_numpy()}
-            if has_label:
-                out[label_col] = pdf[label_col].to_numpy()
-            out["pred"] = pred.astype(np.int32)
-            yield pd.DataFrame(out)
-
-    return df.select(*cols).mapInPandas(vote, schema=schema)
+    return trainer.vote_df(df, [models[b] for b in sorted(models)],
+                           id_col, label_col, features_col)

@@ -83,7 +83,6 @@ def _merge_tail(svs: DataFrame, n_buckets: int, fit_kw: dict
 
 def cascade_train(df: DataFrame, k: int, C: float = 1.0,
                   gamma: float | None = None, kernel: str = "rbf",
-                  checkpoint: bool = True,
                   stats_out: dict | None = None,
                   max_rows_per_bucket: int | None = 20000,
                   ) -> tuple[SVCModel, DataFrame]:
@@ -121,18 +120,15 @@ def cascade_train(df: DataFrame, k: int, C: float = 1.0,
     all. A merge layer is shed lowest-|α| first, using the ``w`` the
     previous layer's fit emitted; layer-0 rows were never trained, so
     the first cap is the stratified coin.
+
+    Raises ``ValueError`` when no layer-0 bucket holds two classes: no
+    support vector would then reach the merge, and there is no model.
     """
     _validate_k(k)
     cap = max_rows_per_bucket
     fit_kw = dict(C=C, gamma=gamma, kernel=kernel, max_rows_per_bucket=cap)
     layers: list[tuple[int, int]] = []
     shed: list[int] = []
-
-    def _materialize(frame: DataFrame) -> DataFrame:
-        # truncate lineage between stages (the reference got this
-        # implicitly by materializing each job to HDFS); plain cache
-        # otherwise
-        return frame.localCheckpoint() if checkpoint else frame.cache()
 
     def _read_stats(rows: list, n_buckets: int) -> int:
         # per-layer totals of a fit's stat rows, whose first layer has
@@ -150,24 +146,31 @@ def cascade_train(df: DataFrame, k: int, C: float = 1.0,
         return totals[max(totals)][2] if totals else 0
 
     n_buckets = k
-    fit = _materialize(trainer.fit_buckets(balanced_buckets(df, k), k=k,
-                                           **fit_kw))
+    # localCheckpoint truncates lineage between stages (the reference
+    # got this implicitly by materializing each job to HDFS)
+    fit = trainer.fit_buckets(balanced_buckets(df, k), k=k,
+                              **fit_kw).localCheckpoint()
     while True:
         n_sv = _read_stats(fit.filter(fit.kind == "stat").collect(),
                            n_buckets)
+        if n_sv == 0:
+            # only a single-class bucket trains to no SVs
+            raise ValueError(
+                f"cascade_train: no bucket of {n_buckets} held two "
+                "classes, so no support vector reached the merge")
         svs = fit.filter(fit.kind == "sv").select(*SV_COLUMNS)
         if n_buckets == 2 or (cap is not None and n_sv <= cap):
             break
         # pair-merge into a stage of its own; each task re-caps its
         # ≤2·cap merged rows to ≤cap before training
         n_buckets //= 2
-        fit = _materialize(trainer.fit_buckets(
+        fit = trainer.fit_buckets(
             svs.withColumn("bucket", F.floor(F.col("bucket") / 2)
                            .cast("int")),
-            k=n_buckets, **fit_kw))
+            k=n_buckets, **fit_kw).localCheckpoint()
     # the remaining merges and the final retrain (Lastcascade.java:
     # 109-144) in one task, like the reference's single reducer
-    fit = _materialize(_merge_tail(svs, n_buckets, fit_kw))
+    fit = _merge_tail(svs, n_buckets, fit_kw).localCheckpoint()
     meta = fit.filter(fit.kind != "sv").collect()
     _read_stats(meta, n_buckets // 2)
     if stats_out is not None:

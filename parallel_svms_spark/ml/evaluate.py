@@ -25,13 +25,3 @@ def accuracy(pred_df: DataFrame) -> float:
     ).collect()[0]
     return float(row.acc)
 
-
-def per_class_error(pred_df: DataFrame) -> DataFrame:
-    """Per-class error rate; errorsum = Σ floor(rate×100)
-    (Itergsv.java:95-97)."""
-    return (
-        pred_df.groupBy("label")
-        .agg(F.avg((F.col("label") != F.col("pred")).cast("double"))
-             .alias("error_rate"))
-        .withColumn("err_contrib", F.floor(F.col("error_rate") * 100))
-    )

@@ -9,70 +9,88 @@ SVs, evaluates, and *appends* newly found SVs back onto the shared file
 The driver loops while errorsum improves, hard cap 3 iterations
 (Driver.java:63-85).
 
-Spark rewrite: the racy shared file becomes an immutable per-iteration
-SV DataFrame: ``gsv_i = gsv_{i-1} ∪ (new SVs EXCEPT gsv_{i-1})``; the
-broadcast-in direction is a crossJoin of the (small) gsv against the
-bucket ids — exactly DistributedCache semantics, but consistent.
+Spark rewrite: the global SV set (gsv) is a small pandas frame on the
+driver, and a broadcast variable is the DistributedCache. Each round is
+one grouped-map stage, one task per bucket: the task appends the
+broadcast gsv to its bucket's rows, trains, and emits only the SVs not
+already in the gsv, plus its err rows. One collect brings back the
+round's errorsum and new SVs, and the driver appends them (sorted and
+deduplicated by ``vec_id``) to the gsv — the append of Itergsv.java:
+101-109, but consistent: every task of a round reads the same gsv.
 
-Scale: gsv is the distilled working set (≪ data); replicating it k×
-is the same cost the reference paid shipping the cache file to every
-task. errorsum flows back through rows, not side-effect counters.
+Scale: gsv is the distilled working set (≪ data); shipping it to every
+task is the cost the reference paid for its cache file.
 """
 
 from __future__ import annotations
 
+import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from parallel_svms_spark.ml import trainer
 from parallel_svms_spark.operators.partitioning import balanced_buckets
 
 MAX_ITERATIONS = 3  # reference hard cap, Iterative_svm/Driver.java:85
 
+GSV_SCHEMA = "vec_id long, label int, embedding array<float>"
+GSV_COLUMNS = ["vec_id", "label", "embedding"]
+
+
+def _round_fit(base: DataFrame, k: int, gsv: Broadcast,
+               fit_kw: dict) -> DataFrame:
+    """One round over ``base``'s k buckets (one task each): every
+    bucket trains on its rows plus the rows of the broadcast gsv frame
+    and emits its SVs not already in the gsv, its err rows and its stat
+    row, in ``trainer.FIT_SCHEMA``."""
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        g = gsv.value
+        if len(g):
+            pdf = pd.concat([pdf, g.assign(bucket=pdf["bucket"].iloc[0])],
+                            ignore_index=True)
+        svs, extra = trainer.train_bucket(pdf, eval_train=True, **fit_kw)
+        return trainer.fit_rows(svs[~svs["vec_id"].isin(g["vec_id"])],
+                                extra)
+
+    # the repartition sits in every round's plan, above the base's
+    # checkpoint, so partition i is bucket i and the grouped map adds
+    # no exchange of its own
+    return (base.repartitionById(k, "bucket").groupBy("bucket")
+            .applyInPandas(run, trainer.FIT_SCHEMA))
+
 
 def iterative_train(df: DataFrame, k: int, C: float = 1.0,
                     gamma: float | None = None, kernel: str = "rbf",
-                    max_iter: int = MAX_ITERATIONS,
                     ) -> tuple[DataFrame, list[int]]:
     """Returns (final global SV DataFrame, per-iteration errorsums).
 
-    Stops when errorsum stops strictly improving or after ``max_iter``
-    rounds (`while (newerrorsum < olderrorsum && iteration < 3)`,
-    Iterative_svm/Driver.java:85). Every round is one
-    ``trainer.fit_buckets`` call (one task per bucket; the one-vs-one
-    pairs inside a task are solved on threads).
+    Every round is ``_round_fit`` (one grouped-map stage, one task per
+    bucket) and one collect of its err and new-SV rows; errorsum =
+    Σ_buckets Σ_class floor(class_error_rate×100) (Itergsv.java:95-97).
+    The round's new SVs join the gsv first; then the loop stops unless
+    errorsum strictly improved, after ``MAX_ITERATIONS`` rounds at most
+    (`while (newerrorsum < olderrorsum && iteration < 3)`,
+    Iterative_svm/Driver.java:85).
     """
     spark = df.sparkSession
     base = balanced_buckets(df, k).localCheckpoint()
-    bucket_ids = spark.range(k).select(F.col("id").cast("int").alias("bucket"))
+    fit_kw = dict(C=C, gamma=gamma, kernel=kernel)
+    gsv = pd.DataFrame(columns=GSV_COLUMNS).astype(
+        {"vec_id": "int64", "label": "int32"})
     errorsums: list[int] = []
-    gsv = None          # global SV set: (vec_id, label, embedding)
-    old_err = None
-    for _ in range(max_iter):
-        if gsv is None:
-            cur = base
-        else:
-            # S5/U1: ship the global SV set to every bucket
-            # (DistributedCache → broadcast crossJoin) and union with
-            # the local subset (Itergsv.java:91)
-            gsv_rep = gsv.crossJoin(F.broadcast(bucket_ids)) \
-                         .select("vec_id", "label", "embedding", "bucket")
-            cur = base.unionByName(gsv_rep)
-        fit = trainer.fit_buckets(cur, C=C, gamma=gamma, kernel=kernel,
-                                  eval_train=True, k=k).localCheckpoint()
-        new_err = trainer.err_sum(fit)
-        errorsums.append(new_err)
-        svs = trainer.svs_only(fit).select("vec_id", "label", "embedding") \
-                     .dropDuplicates(["vec_id"])
-        if gsv is None:
-            gsv = svs.localCheckpoint()
-        else:
-            # P5/U2: only SVs not already global (left-anti), then
-            # append — the immutable rewrite of the global_sv.csv
-            # append (Itergsv.java:101-109)
-            new_svs = svs.join(gsv.select("vec_id"), "vec_id", "left_anti")
-            gsv = gsv.unionByName(new_svs).localCheckpoint()
-        if old_err is not None and not (new_err < old_err):
+    for _ in range(MAX_ITERATIONS):
+        bc = spark.sparkContext.broadcast(gsv)
+        try:
+            out = (_round_fit(base, k, bc, fit_kw)
+                   .filter("kind != 'stat'")
+                   .select("kind", "err", *GSV_COLUMNS).toPandas())
+        finally:
+            bc.destroy()
+        errorsums.append(int(out.loc[out["kind"] == "err", "err"].sum()))
+        new = (out.loc[out["kind"] == "sv", GSV_COLUMNS]
+               .sort_values("vec_id", kind="mergesort")
+               .drop_duplicates("vec_id"))
+        gsv = pd.concat([gsv, new], ignore_index=True)
+        if len(errorsums) > 1 and not errorsums[-1] < errorsums[-2]:
             break
-        old_err = new_err
-    return gsv, errorsums
+    return spark.createDataFrame(gsv, GSV_SCHEMA), errorsums

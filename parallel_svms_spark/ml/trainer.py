@@ -16,7 +16,8 @@ more than a subset + the (small, distilled) SV set.
 
 One trainer path: every bucket of every cascade layer, iterative
 round, bagging fit and final retrain is one ``train_bucket`` call —
-in its own task under ``fit_buckets``, or in sequence inside the one
+in its own task under ``fit_buckets`` or under an iterative round's
+grouped map (``iterative._round_fit``), or in sequence inside the one
 task that runs the cascade's narrow tail — and inside it
 ``smo.train_svc`` solves the one-vs-one pairs on threads. A narrow
 layer (few buckets) therefore still uses the executor's cores without
@@ -202,14 +203,6 @@ def collect_models(fit_result: DataFrame) -> dict[int, smo.SVCModel]:
             for r in rows}
 
 
-def err_sum(fit_result: DataFrame) -> int:
-    """A4 errorsum: Σ_buckets Σ_class floor(class_error_rate×100)
-    (TOTAL_MIS_CLF counter, Iterative_svm/Itergsv.java:95-97)."""
-    row = (fit_result.filter(fit_result.kind == "err")
-           .agg({"err": "sum"}).collect()[0][0])
-    return int(row) if row is not None else 0
-
-
 def predict_df(df: DataFrame, model: smo.SVCModel,
                id_col: str = "vec_id", label_col: str = "label",
                features_col: str = "embedding") -> DataFrame:
@@ -218,23 +211,39 @@ def predict_df(df: DataFrame, model: smo.SVCModel,
     The model (SV matrix + coefs) is the only state shipped — same
     shape as the reference's DistributedCache model shipping (S5).
     """
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(model.to_dict())
+    return vote_df(df, [model], id_col, label_col, features_col)
+
+
+def vote_df(df: DataFrame, models: list[smo.SVCModel],
+            id_col: str = "vec_id", label_col: str = "label",
+            features_col: str = "embedding") -> DataFrame:
+    """Majority vote of ``models`` per row (columns id, [label,] pred);
+    ties go to the lowest class. One model's vote is its ``predict``.
+    The models are broadcast once and score map-side, batch by batch.
+    """
+    bc = df.sparkSession.sparkContext.broadcast(
+        [m.to_dict() for m in models])
     has_label = label_col in df.columns
     cols = [id_col, features_col] + ([label_col] if has_label else [])
     schema = f"{id_col} long, " + (f"{label_col} int, " if has_label else "") \
              + "pred int"
 
     def score(it):
-        m = smo.SVCModel.from_dict(bc.value)
+        ms = [smo.SVCModel.from_dict(d) for d in bc.value]
+        classes = np.unique(np.concatenate([m.classes for m in ms]))
         for pdf in it:
             if len(pdf) == 0:
                 continue
             X = np.stack(pdf[features_col].to_numpy()).astype(np.float64)
+            votes = np.zeros((len(X), len(classes)), dtype=np.int64)
+            for m in ms:
+                votes[np.arange(len(X)),
+                      np.searchsorted(classes, m.predict(X))] += 1
             out = {id_col: pdf[id_col].to_numpy()}
             if has_label:
                 out[label_col] = pdf[label_col].to_numpy()
-            out["pred"] = m.predict(X).astype(np.int32)
+            # argmax takes the first maximum: the lowest tied class
+            out["pred"] = classes[np.argmax(votes, axis=1)].astype(np.int32)
             yield pd.DataFrame(out)
 
     return df.select(*cols).mapInPandas(score, schema=schema)

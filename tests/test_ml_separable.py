@@ -164,6 +164,70 @@ def test_iterative_accuracy_and_error_signal(blobs, single_model_acc):
     assert 0 < gsv.count() < 0.5 * N_ROWS
 
 
+def _crossjoin_iterative(df, k, gamma):
+    """The iterative loop as Spark plans: per round a crossJoin of the
+    global SV set against the bucket ids, a union with the buckets, a
+    ``dropDuplicates`` and a left-anti join — the form the broadcast
+    round replaced, kept here as its reference. Returns (gsv rows as
+    (vec_id, label, embedding bytes), errorsums, gsv size per round)."""
+    from pyspark.sql import functions as F
+
+    from parallel_svms_spark.ml.iterative import MAX_ITERATIONS
+    from parallel_svms_spark.operators.partitioning import balanced_buckets
+
+    spark = df.sparkSession
+    base = balanced_buckets(df, k).localCheckpoint()
+    bucket_ids = spark.range(k).select(F.col("id").cast("int")
+                                       .alias("bucket"))
+    errs, sizes, gsv = [], [], None
+    for _ in range(MAX_ITERATIONS):
+        cur = base if gsv is None else base.unionByName(
+            gsv.crossJoin(F.broadcast(bucket_ids))
+            .select("vec_id", "label", "embedding", "bucket"))
+        fit = trainer.fit_buckets(cur, gamma=gamma, eval_train=True,
+                                  k=k).localCheckpoint()
+        errs.append(int(fit.filter("kind = 'err'").agg(F.sum("err"))
+                        .collect()[0][0]))
+        svs = trainer.svs_only(fit).select("vec_id", "label", "embedding") \
+            .dropDuplicates(["vec_id"])
+        if gsv is not None:
+            svs = gsv.unionByName(
+                svs.join(gsv.select("vec_id"), "vec_id", "left_anti"))
+        gsv = svs.localCheckpoint()
+        sizes.append(gsv.count())
+        if len(errs) > 1 and not errs[-1] < errs[-2]:
+            break
+    return _gsv_rows(gsv), errs, sizes
+
+
+def _gsv_rows(gsv):
+    return sorted((r.vec_id, r.label,
+                   np.asarray(r.embedding, dtype=np.float32).tobytes())
+                  for r in gsv.collect())
+
+
+@pytest.mark.parametrize("gamma, n_rounds", [(0.5, 2), (2.0, 3)])
+def test_iterative_equals_crossjoin_loop(spark, gamma, n_rounds):
+    """The broadcast round trains the same rows as the crossJoin loop:
+    the same errorsums and the same global SV set, embeddings to the
+    bit. Overlapping blobs, so round 2 finds SVs round 1 did not; at
+    γ=0.5 the errorsum worsens and the loop stops after 2 rounds, at
+    γ=2 it improves and the loop runs all 3."""
+    X, y = _blobs(n=800, n_classes=3, dim=4, spread=2.0, std=1.0, seed=5)
+    rows = [(int(i), int(y[i]), [float(v) for v in X[i]])
+            for i in range(len(y))]
+    df = spark.createDataFrame(
+        rows, "vec_id long, label int, embedding array<float>") \
+        .repartition(8).localCheckpoint()
+    gsv, errs = iterative_train(df, k=4, gamma=gamma)
+    ref_rows, ref_errs, sizes = _crossjoin_iterative(df, 4, gamma)
+    # round 2 must add SVs, or the test never sees a round append to a
+    # non-empty gsv
+    assert len(sizes) == n_rounds and sizes[1] > sizes[0], sizes
+    assert errs == ref_errs
+    assert _gsv_rows(gsv) == ref_rows
+
+
 def test_cascade_cap_weight_beats_coin(spark):
     """VERDICT r7 #6: at the same binding cap, shedding lowest-|alpha|
     rows (the ``w`` fit_buckets emits on SV rows) must keep a set that
@@ -343,3 +407,18 @@ def test_cascade_shed_log_zero_when_cap_inactive(blobs):
     cascade_train(blobs, k=8, gamma=GAMMA, stats_out=stats,
                   max_rows_per_bucket=20000)
     assert stats["shed"] == [0] * len(stats["layers"])
+
+
+@pytest.mark.parametrize("n_cls, k", [(1, 4), (2, 2)])
+def test_cascade_raises_when_no_bucket_holds_two_classes(spark, n_cls, k):
+    """Single-class buckets train to no SVs, so nothing reaches the
+    merge: one class in all the data (k=4), or label = vec_id % 2 with
+    k=2, so each ``mod`` bucket holds one class. A clear ValueError,
+    not a bare StopIteration from the missing model row."""
+    rng = np.random.default_rng(5)
+    rows = [(i, i % n_cls, [float(v) for v in rng.standard_normal(4)])
+            for i in range(200)]
+    df = spark.createDataFrame(
+        rows, "vec_id long, label int, embedding array<float>")
+    with pytest.raises(ValueError, match="two classes"):
+        cascade_train(df, k=k, gamma=0.25)

@@ -113,6 +113,30 @@ def test_fit_buckets_one_partition_per_bucket(spark, emb):
     assert sorted(r.bucket for r in stats) == [0, 1, 2, 3]
 
 
+def test_iterative_round_one_task_per_bucket(spark, emb):
+    # an iterative round is one grouped map over the checkpointed
+    # buckets: partition i holds exactly bucket i, one exchange and no
+    # join in the plan (the gsv arrives as a broadcast variable), and
+    # no emitted SV is already in the gsv
+    from parallel_svms_spark.ml import iterative
+    from parallel_svms_spark.operators.partitioning import balanced_buckets
+    base = balanced_buckets(emb, 4).localCheckpoint()
+    gsv = base.filter("vec_id % 7 = 0") \
+        .select(*iterative.GSV_COLUMNS).toPandas()
+    fit = iterative._round_fit(base, 4, spark.sparkContext.broadcast(gsv),
+                               dict(gamma=2.0))
+    plan = fit._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1 and "Join" not in plan, plan
+    rows = fit.select("bucket", "kind", "vec_id",
+                      F.spark_partition_id().alias("pid")).collect()
+    assert {r.bucket for r in rows} == {0, 1, 2, 3}
+    assert all(r.pid == r.bucket for r in rows)
+    sv_ids = {r.vec_id for r in rows if r.kind == "sv"}
+    assert sv_ids and not sv_ids & set(gsv["vec_id"])
+    assert sorted({r.bucket for r in rows if r.kind == "err"}) \
+        == [0, 1, 2, 3]
+
+
 def test_trainer_err_rows(spark, emb):
     from parallel_svms_spark.operators.partitioning import balanced_buckets
     fit = trainer.fit_buckets(balanced_buckets(emb, 2), eval_train=True)
