@@ -138,8 +138,9 @@ def model_to_parquet(model: SVCModel, spark, path: str) -> None:
     Every component — header included — goes through Spark writers, so
     the whole artifact lands on whatever filesystem ``path`` names
     (local, hdfs://, s3a://); no driver-local file I/O."""
-    d = model.to_dict()
-    header = {k: d[k] for k in ("classes", "kernel", "gamma", "C", "rhos")}
+    header = {"classes": model.classes.tolist(), "kernel": model.kernel,
+              "gamma": model.gamma, "C": model.C,
+              "rhos": {f"{a},{b}": r for (a, b), r in model.rhos.items()}}
     sv_rows = [
         (int(i), int(model.sv_labels[i]), [float(x) for x in model.X_sv[i]])
         for i in range(model.n_sv)
@@ -158,8 +159,8 @@ def model_to_parquet(model: SVCModel, spark, path: str) -> None:
 
 def model_from_parquet(spark, path: str) -> SVCModel:
     """Read back a ``model_to_parquet`` artifact (any Spark-readable
-    filesystem). Model sides are contractually driver-small (k model
-    JSONs / SV sets), so the collects here are bounded."""
+    filesystem). A model is driver-small (one SV set and its
+    coefficients), so the collects here are bounded."""
     header = json.loads(
         spark.read.text(f"{path}/header").first()["value"])
     svs = spark.read.parquet(f"{path}/svs").orderBy("sv_pos").collect()

@@ -1,12 +1,11 @@
 """Native (C) build of the SMO no-shrink inner loop.
 
-The numpy fast path in ``smo._smo_solve_noshrink`` spends its time in
+The numpy loop, ``smo._smo_solve_general``, spends its time in
 per-iteration ufunc dispatch: ~12 short vector ops per iteration whose
 fixed Python/numpy call overhead dominates at bucket sizes (n ≤ a few
 thousand), so a 51 200-iteration capped dual at n=512 costs seconds of
 pure dispatch. This module compiles the IDENTICAL loop to machine code
-once per host and calls it via ctypes — guide §1.2 step 2 (per-task
-work) applied to the one CPU kernel every ML operator sits on.
+once per host and calls it via ctypes.
 
 Bit-identity contract (the golden oracles pin exact floats):
 
@@ -21,16 +20,16 @@ Bit-identity contract (the golden oracles pin exact floats):
 - ``argmax``/``argmin`` keep numpy's first-occurrence tie-break
   (strict ``>`` / ``<`` comparisons).
 - Equality is not argued but pinned: tests/test_smo.py compares the
-  native path against the numpy path (and the original reference loop)
-  over a randomized battery, and the training goldens re-assert exact
-  values end-to-end.
+  native loop against the numpy loop over a randomized battery, and
+  the training goldens re-assert exact values end-to-end.
 
 Caching: the shared object is keyed by the SHA-1 of the C source under
 ``~/.cache/parallel_svms_spark`` (fallback: the system temp dir) and
 built with an atomic rename, so concurrent first-callers (e.g. 32
 Arrow workers) race benignly. This caches CODE, never data or query
-results. Any failure — no gcc, unwritable cache, dlopen error — falls
-back to the numpy path, which computes bit-identical results.
+results. Any failure — no gcc, a build error, a dlopen error — falls
+back to the numpy loop, which computes bit-identical results more
+slowly, and warns once per process with the reason.
 """
 
 from __future__ import annotations
@@ -41,6 +40,7 @@ import os
 import subprocess
 import tempfile
 import threading
+import warnings
 
 C_SOURCE = r"""
 #include <math.h>
@@ -215,7 +215,9 @@ def _build(so_path: str) -> None:
 
 
 def load():
-    """ctypes handle to the compiled loop, or None (numpy fallback).
+    """ctypes handle to the compiled loop, or None: then the caller
+    runs the numpy loop, and the first call in the process has emitted
+    a ``RuntimeWarning`` naming why the build is missing.
     Memoized per process; the .so is cached per host keyed by source
     hash, so repeat sessions skip the compile entirely. Thread-safe:
     ``smo.train_svc`` calls this from its pair-solving threads, and a
@@ -232,19 +234,32 @@ def load():
 
 
 def _open():
-    if os.environ.get("PARALLEL_SVMS_NO_NATIVE_SMO") == "1":
-        return None
+    sha = hashlib.sha1(C_SOURCE.encode()).hexdigest()[:16]
+    so_path = os.path.join(_cache_root(), "parallel_svms_spark",
+                           f"smo_noshrink_{sha}.so")
     try:
-        sha = hashlib.sha1(C_SOURCE.encode()).hexdigest()[:16]
-        so_path = os.path.join(_cache_root(), "parallel_svms_spark",
-                               f"smo_noshrink_{sha}.so")
         if not os.path.exists(so_path):
             _build(so_path)
+    except FileNotFoundError as e:
+        return _fall_back("no gcc on PATH" if e.filename == "gcc"
+                          else f"build error: {e}")
+    except subprocess.CalledProcessError as e:
+        return _fall_back(f"build error: gcc exited {e.returncode}: "
+                          f"{e.stderr.decode(errors='replace')[-500:]}")
+    except (OSError, subprocess.SubprocessError) as e:
+        return _fall_back(f"build error: {e!r}")
+    try:
         lib = ctypes.CDLL(so_path)
         fn = lib.smo_noshrink_loop
         fn.restype = ctypes.c_int
         fn.argtypes = [ctypes.POINTER(ctypes.c_double)] * 5 + [
             ctypes.c_long, ctypes.c_double, ctypes.c_double, ctypes.c_long]
         return lib
-    except Exception:
-        return None
+    except (OSError, AttributeError) as e:  # no file, or no symbol
+        return _fall_back(f"dlopen error on {so_path}: {e}")
+
+
+def _fall_back(why: str) -> None:
+    warnings.warn(f"native SMO loop unavailable ({why}); every dual in "
+                  "this process runs the numpy loop: same results, "
+                  "slower", RuntimeWarning, stacklevel=4)

@@ -29,8 +29,6 @@ threads.
 
 from __future__ import annotations
 
-import json
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -175,6 +173,5 @@ def cascade_train(df: DataFrame, k: int, C: float = 1.0,
     _read_stats(meta, n_buckets // 2)
     if stats_out is not None:
         stats_out.update(layers=layers, shed=shed)
-    model = SVCModel.from_dict(json.loads(
-        next(r.model_json for r in meta if r.kind == "model")))
+    (model,) = trainer.models_of(meta).values()
     return model, trainer.svs_only(fit)

@@ -22,6 +22,7 @@ imports it directly; ``ml.trainer`` wraps it in applyInPandas.
 from __future__ import annotations
 
 import os
+import warnings
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
@@ -109,10 +110,11 @@ def smo_solve(K: np.ndarray, y: np.ndarray, C: float = 1.0,
 
 def _smo_solve_general(K: np.ndarray, y: np.ndarray, C: float,
                        eps: float, max_iter: int):
-    """The original (pre-r10) loop: the reference implementation the
-    fast paths' bitwise-equality pytest runs against. Neither speed
-    nor callers matter here, only that every op and operand order
-    stays as it was."""
+    """The SMO loop in numpy: the fallback when the compiled loop is
+    unavailable, and the reference the tests pin the compiled loop
+    against bit for bit. ``_smo_native.C_SOURCE`` ports it one
+    floating-point operation at a time, so every op and its operand
+    order must stay as they are."""
     n = len(y)
     y = np.asarray(y, dtype=np.float64)
     alpha = np.zeros(n)
@@ -189,19 +191,18 @@ def _rho_epilogue(y: np.ndarray, alpha: np.ndarray, grad: np.ndarray,
 
 def _smo_solve_noshrink(K: np.ndarray, y: np.ndarray, C: float,
                         eps: float, max_iter: int):
-    """Dispatch the no-shrink loop to the compiled build when the host
-    can provide one (guide §1.2 step 2: the per-iteration cost here is
-    numpy ufunc DISPATCH, not arithmetic — ~12 short vector ops per
-    iteration whose fixed overhead dominates at bucket sizes). The C
-    loop is a bit-for-bit port (same ops, same operand order, IEEE
-    doubles, no FMA contraction — _smo_native docstring) and the numpy
-    path remains both the fallback and the equality oracle the tests
-    pin the native build against."""
+    """Run the SMO loop compiled when the host can build it, else
+    ``_smo_solve_general`` (``_smo_native.load`` warns once per process
+    when it cannot). In numpy the per-iteration cost is ufunc dispatch,
+    not arithmetic: ~12 short vector ops whose fixed overhead dominates
+    at bucket sizes. The C loop is a bit-for-bit port of the numpy one
+    (same ops, same operand order, IEEE doubles, no FMA contraction —
+    ``_smo_native`` docstring), so both return the same (alpha, rho)."""
     from parallel_svms_spark.ml import _smo_native
     lib = _smo_native.load()
     if lib is not None:
         return _smo_solve_noshrink_native(lib, K, y, C, eps, max_iter)
-    return _smo_solve_noshrink_np(K, y, C, eps, max_iter)
+    return _smo_solve_general(K, y, C, eps, max_iter)
 
 
 def _smo_solve_noshrink_native(lib, K: np.ndarray, y: np.ndarray,
@@ -219,121 +220,10 @@ def _smo_solve_noshrink_native(lib, K: np.ndarray, y: np.ndarray,
         alpha.ctypes.data_as(p), grad.ctypes.data_as(p),
         n, float(C), float(eps), int(max_iter))
     if rc != 0:  # scratch allocation failed — numpy computes the same
-        return _smo_solve_noshrink_np(K, y, C, eps, max_iter)
-    return alpha, _rho_epilogue(y, alpha, grad, C)
-
-
-def _smo_solve_noshrink_np(K: np.ndarray, y: np.ndarray, C: float,
-                           eps: float, max_iter: int):
-    """``_smo_solve_general``'s loop with per-iteration
-    allocations hoisted out (guide §1.2 step 2 — per-task work): every
-    n-length temporary is a preallocated buffer written with ``out=``
-    ufuncs, ``np.where`` selects become fill+``np.copyto(where=)``,
-    and ``y·K`` rows are precomputed once as a row-scaled matrix
-    (YK[i, j] = K[i, j]·y[j] — the exact product the loop forms per
-    iteration). The up/low feasibility masks are maintained
-    incrementally (only alpha[li]/alpha[lj] move per iteration), and
-    yg is formed as (−y)·grad with a precomputed −y — exact under
-    IEEE (±1 multiplies and sign flips are lossless). Every remaining
-    arithmetic op keeps the reference path's operand ORDER, so
-    results are bit-identical (pytest-pinned equality over a random
-    problem battery + the existing golden oracles); measured 1.1-1.4×
-    for the buffer pass (n=512: 2.6 → 1.9 s) and a further ~1.3× for
-    the incremental masks."""
-    n = len(y)
-    y = np.asarray(y, dtype=np.float64)
-    alpha = np.zeros(n)
-    Kd = np.ascontiguousarray(np.diag(K)).astype(np.float64)
-    NEG_INF, POS_INF = -np.inf, np.inf
-    grad = -np.ones(n)                  # ∇f(α) = Qα − e, α=0 ⇒ −e
-    YK = K * y[None, :]                 # YK[i] == y * K[i] bitwise
-    pos = y > 0
-    yneg = -y                           # (−y)·g ≡ −(y·g) bitwise: the
-    yg = np.empty(n)                    # sign bit is exact under IEEE
-    yg_up = np.empty(n)
-    yg_low = np.empty(n)
-    b = np.empty(n)
-    a = np.empty(n)
-    obj = np.empty(n)
-    t1 = np.empty(n)
-    t2 = np.empty(n)
-    m1 = np.empty(n, dtype=bool)
-    # feasibility masks depend only on alpha, and each iteration moves
-    # exactly alpha[li] and alpha[lj] — maintain up/low INCREMENTALLY
-    # at those two indices instead of rebuilding all four n-length
-    # boolean temporaries every pass (the masks are equal element-wise
-    # to the rebuilt ones, so the trajectory is unchanged bit-for-bit)
-    # up = pos ? (α<C) : (α>0);  low = pos ? (α>0) : (α<C)
-    lt = alpha < C
-    gt = alpha > 0.0
-    up = np.where(pos, lt, gt)
-    low = np.where(pos, gt, lt)
-
-    def _upd_mask(i: int, ai: float) -> None:
-        lt_i = ai < C
-        gt_i = ai > 0.0
-        if pos[i]:
-            up[i] = lt_i
-            low[i] = gt_i
-        else:
-            up[i] = gt_i
-            low[i] = lt_i
-
-    for _ in range(max_iter):
-        np.multiply(yneg, grad, out=yg)  # yg = −y∇f, as the reference
-        yg_up.fill(NEG_INF)
-        np.copyto(yg_up, yg, where=up)
-        li = int(np.argmax(yg_up))
-        m = yg_up[li]
-        yg_low.fill(POS_INF)
-        np.copyto(yg_low, yg, where=low)
-        M = yg_low.min()
-        stalled = (m == NEG_INF) or (M == POS_INF) or (m - M < eps)
-        lj = -1
-        if not stalled:
-            # second-order j selection among violators (WSS2), same
-            # expressions as the reference loop
-            Krow_i = K[li]
-            np.subtract(m, yg, out=b)
-            np.add(Kd, Kd[li], out=t2)          # Kd[li] + Kd
-            np.multiply(YK[li], 2.0 * y[li], out=t1)
-            np.subtract(t2, t1, out=a)
-            np.maximum(a, TAU, out=a)
-            np.multiply(b, b, out=t1)
-            np.negative(t1, out=t1)
-            np.divide(t1, a, out=t1)            # −b²/a everywhere
-            np.greater(b, TAU, out=m1)
-            np.logical_and(low, m1, out=m1)
-            obj.fill(POS_INF)
-            np.copyto(obj, t1, where=m1)
-            lj = int(np.argmin(obj))
-            stalled = obj[lj] == POS_INF
-        if stalled:
-            break
-        quad = max(Kd[li] + Kd[lj]
-                   - 2.0 * y[li] * y[lj] * Krow_i[lj], TAU)
-        delta = (m - yg[lj]) / quad
-        old_ai, old_aj = alpha[li], alpha[lj]
-        ai = old_ai + y[li] * delta
-        s = y[li] * old_ai + y[lj] * old_aj
-        ai = min(max(ai, 0.0), C)
-        aj = y[lj] * (s - y[li] * ai)
-        if aj < 0.0:
-            aj = 0.0
-            ai = y[li] * (s - y[lj] * aj)
-        elif aj > C:
-            aj = C
-            ai = y[li] * (s - y[lj] * aj)
-        dai, daj = ai - old_ai, aj - old_aj
-        if abs(dai) < TAU and abs(daj) < TAU:
-            break
-        alpha[li], alpha[lj] = ai, aj
-        _upd_mask(li, ai)
-        _upd_mask(lj, aj)
-        np.multiply(YK[li], y[li] * dai, out=t1)
-        np.multiply(YK[lj], y[lj] * daj, out=t2)
-        np.add(t1, t2, out=t1)
-        np.add(grad, t1, out=grad)              # += (y·Kᵢ)(yᵢδᵢ) + (y·Kⱼ)(yⱼδⱼ)
+        warnings.warn("native SMO loop could not allocate its scratch "
+                      f"buffers (n={n}); solving this dual with the numpy "
+                      "loop", RuntimeWarning)
+        return _smo_solve_general(K, y, C, eps, max_iter)
     return alpha, _rho_epilogue(y, alpha, grad, C)
 
 
@@ -394,19 +284,6 @@ class SVCModel:
             "kernel": self.kernel, "gamma": self.gamma, "C": self.C,
         }
 
-    @classmethod
-    def from_dict(cls, d: dict) -> "SVCModel":
-        pair_coefs = {tuple(map(int, k.split(","))):
-                      (np.asarray(v[0], dtype=np.int64),
-                       np.asarray(v[1], dtype=np.float64))
-                      for k, v in d["pair_coefs"].items()}
-        rhos = {tuple(map(int, k.split(","))): float(v)
-                for k, v in d["rhos"].items()}
-        return cls(np.asarray(d["classes"]),
-                   np.asarray(d["X_sv"], dtype=np.float64),
-                   np.asarray(d["sv_labels"]), pair_coefs, rhos,
-                   d["kernel"], d["gamma"], d["C"])
-
 
 def train_svc(X: np.ndarray, y: np.ndarray, C: float = 1.0,
               gamma: float | str | None = None, kernel: str = "rbf",
@@ -434,9 +311,20 @@ def train_svc(X: np.ndarray, y: np.ndarray, C: float = 1.0,
     and 2 threads, so a driver-side call matches a Spark task (whose
     Python worker is pinned to one thread) only under
     ``OMP_NUM_THREADS=1``.
+
+    Raises ``ValueError`` when ``X`` holds a NaN or an infinity, or
+    when ``y`` does not have one label per row of ``X``: a NaN feature
+    would otherwise train a model without any error.
     """
     X = np.asarray(X, dtype=np.float64)
     y = np.asarray(y)
+    if len(y) != len(X):
+        raise ValueError(f"train_svc: {len(X)} rows of X but {len(y)} "
+                         "labels")
+    if not np.isfinite(X).all():
+        bad = np.flatnonzero(~np.isfinite(X).all(axis=1))
+        raise ValueError(f"train_svc: {len(bad)} rows of X hold NaN or "
+                         f"inf (first at row {bad[0]})")
     if gamma is None:
         gamma = 1.0 / X.shape[1]
     elif gamma == "scale":

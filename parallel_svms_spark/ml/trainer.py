@@ -27,7 +27,7 @@ replicating rows across pairs.
 from __future__ import annotations
 
 import hashlib
-import json
+import pickle
 
 import numpy as np
 import pandas as pd
@@ -39,7 +39,8 @@ from parallel_svms_spark.ml import smo
 #   kind='sv'     → one row per support vector (M2, Midcascade.java:123-128)
 #   kind='err'    → per-class training-error metric rows (M5/A4,
 #                   Itergsv.java:95-97): err = floor(class_error_rate*100)
-#   kind='model'  → one row per bucket with the serialized model (S4)
+#   kind='model'  → one row per bucket whose ``model`` is the pickled
+#                   SVCModel (S4); ``models_of`` decodes it
 #   kind='stat'   → one row per trained bucket: n_in rows arrived,
 #                   n_shed of them the row cap dropped, n_sv SVs came
 #                   out; ``layer`` counts merge layers from the fit's
@@ -48,7 +49,7 @@ from parallel_svms_spark.ml import smo
 # model's pairs (= its max α); ``cap_bucket_rows`` sheds the smallest
 # first. Null on the other kinds.
 FIT_SCHEMA = ("bucket int, kind string, vec_id long, label int, "
-              "embedding array<float>, err long, model_json string, "
+              "embedding array<float>, err long, model binary, "
               "w double, layer int, n_in long, n_shed long, n_sv long")
 FIT_COLUMNS = [c.split()[0] for c in FIT_SCHEMA.split(", ")]
 
@@ -129,7 +130,7 @@ def train_bucket(pdf: pd.DataFrame, C: float = 1.0,
         "vec_id": sv["vec_id"].to_numpy(),
         "label": sv["label"].to_numpy(),
         "embedding": sv["embedding"].to_numpy(),
-        "err": np.int64(0), "model_json": None, "w": w,
+        "err": np.int64(0), "model": None, "w": w,
     })
     extra = [{"bucket": bucket, "kind": "stat", "vec_id": -1, "label": -1,
               "layer": 0, "n_in": n_in, "n_shed": n_in - len(pdf),
@@ -145,14 +146,14 @@ def train_bucket(pdf: pd.DataFrame, C: float = 1.0,
     if with_model:
         extra.append({"bucket": bucket, "kind": "model", "vec_id": -1,
                       "label": -1, "err": np.int64(0),
-                      "model_json": json.dumps(model.to_dict())})
+                      "model": pickle.dumps(model)})
     return svs, extra
 
 
 def fit_rows(svs: pd.DataFrame, extra: list[dict]) -> pd.DataFrame:
     """SV rows plus extra row dicts as one frame in FIT_SCHEMA's
     column order (columns a row leaves out are null)."""
-    extra = pd.DataFrame([{"embedding": None, "model_json": None, **r}
+    extra = pd.DataFrame([{"embedding": None, "model": None, **r}
                           for r in extra])
     out = pd.concat([svs, extra], ignore_index=True)
     return out.reindex(columns=FIT_COLUMNS)
@@ -195,12 +196,20 @@ def svs_only(fit_result: DataFrame) -> DataFrame:
             .select("bucket", "vec_id", "label", "embedding"))
 
 
+def models_of(rows) -> dict[int, smo.SVCModel]:
+    """bucket → model of the ``model`` rows among FIT_SCHEMA rows
+    (Spark ``Row``s or named tuples), which ``train_bucket`` fills with
+    the pickled in-task model: the decoded model is that object, every
+    array with its dtype."""
+    return {r.bucket: pickle.loads(r.model) for r in rows
+            if r.kind == "model"}
+
+
 def collect_models(fit_result: DataFrame) -> dict[int, smo.SVCModel]:
-    """Driver-side: bucket → model (model rows are k small JSON blobs)."""
-    rows = fit_result.filter(fit_result.kind == "model") \
-                     .select("bucket", "model_json").collect()
-    return {r.bucket: smo.SVCModel.from_dict(json.loads(r.model_json))
-            for r in rows}
+    """Driver-side: bucket → model, from one collect of the fit's model
+    rows (one pickled model per bucket)."""
+    return models_of(fit_result.filter(fit_result.kind == "model")
+                     .select("bucket", "kind", "model").collect())
 
 
 def predict_df(df: DataFrame, model: smo.SVCModel,
@@ -219,17 +228,17 @@ def vote_df(df: DataFrame, models: list[smo.SVCModel],
             features_col: str = "embedding") -> DataFrame:
     """Majority vote of ``models`` per row (columns id, [label,] pred);
     ties go to the lowest class. One model's vote is its ``predict``.
-    The models are broadcast once and score map-side, batch by batch.
+    The model objects are broadcast once, so each Python worker
+    unpickles them once; they score map-side, batch by batch.
     """
-    bc = df.sparkSession.sparkContext.broadcast(
-        [m.to_dict() for m in models])
+    bc = df.sparkSession.sparkContext.broadcast(models)
     has_label = label_col in df.columns
     cols = [id_col, features_col] + ([label_col] if has_label else [])
     schema = f"{id_col} long, " + (f"{label_col} int, " if has_label else "") \
              + "pred int"
 
     def score(it):
-        ms = [smo.SVCModel.from_dict(d) for d in bc.value]
+        ms = bc.value
         classes = np.unique(np.concatenate([m.classes for m in ms]))
         for pdf in it:
             if len(pdf) == 0:

@@ -96,6 +96,45 @@ def test_fit_buckets_sv_rows_carry_max_dual_weight(spark, emb):
         assert {key: v for key, v in got.items() if key[0] == b} == want
 
 
+def test_decoded_model_row_is_the_in_task_model():
+    # the model row train_bucket emits decodes (models_of) to exactly
+    # the model train_svc trains on the same vec_id-sorted rows: every
+    # array equal in value and dtype — labels arrive in a task as
+    # int32, as Arrow hands them — and the same kernel, gamma and C
+    import numpy as np
+    import pandas as pd
+
+    from parallel_svms_spark.ml import smo
+    rng = np.random.default_rng(21)
+    n = 150
+    y = rng.integers(0, 3, size=n).astype(np.int32)
+    X = (rng.standard_normal((n, 8)) + 2.0 * y[:, None]).astype(np.float32)
+    ids = rng.permutation(n).astype(np.int64) * 7
+    pdf = pd.DataFrame({"vec_id": ids, "label": y, "embedding": list(X),
+                        "bucket": np.int32(3)})
+    rows = trainer.fit_rows(*trainer.train_bucket(pdf, gamma=0.5,
+                                                  with_model=True))
+    models = trainer.models_of(rows.itertuples())
+    assert list(models) == [3]
+    got = models[3]
+    order = np.argsort(ids, kind="stable")
+    want = smo.train_svc(X[order].astype(np.float64), y[order], gamma=0.5)
+
+    def same(a, b):
+        return a.dtype == b.dtype and np.array_equal(a, b)
+
+    assert same(got.classes, want.classes)
+    assert same(got.X_sv, want.X_sv)
+    assert same(got.sv_labels, want.sv_labels)
+    assert list(got.pair_coefs) == list(want.pair_coefs)
+    for pair, (idx, coef) in want.pair_coefs.items():
+        assert same(got.pair_coefs[pair][0], idx)
+        assert same(got.pair_coefs[pair][1], coef)
+    assert got.rhos == want.rhos
+    assert (got.kernel, got.gamma, got.C) == (want.kernel, want.gamma,
+                                              want.C)
+
+
 def test_fit_buckets_one_partition_per_bucket(spark, emb):
     # with k given, partition i holds exactly bucket i (one training
     # task per bucket) and the grouped map reuses that single exchange

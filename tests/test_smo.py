@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from parallel_svms_spark.ml.smo import (
     linear_kernel, rbf_kernel, smo_solve, train_svc,
@@ -65,11 +66,11 @@ def test_determinism():
 
 
 def test_fast_path_bitwise_equals_general_loop():
-    """r10 optimization pin: smo_solve's buffer-reusing no-shrink fast
-    path returns the BITWISE-identical (alpha, rho) the original loop
-    (_smo_solve_general) produces — same ops, same
-    operand order, over a battery spanning converged and
-    iteration-capped duals, both kernels, and C extremes."""
+    """smo_solve (the compiled loop where it loads) returns the
+    BITWISE-identical (alpha, rho) the numpy loop (_smo_solve_general)
+    produces — same ops, same operand order, over a battery spanning
+    converged and iteration-capped duals, both kernels, and C
+    extremes."""
     import numpy as np
     from parallel_svms_spark.ml import smo
 
@@ -93,10 +94,10 @@ def test_fast_path_bitwise_equals_general_loop():
     assert checked >= 6
 
 
-def test_native_loop_bitwise_equals_numpy_fast_path():
-    """r10 optimization pin: the compiled no-shrink loop (_smo_native,
-    gcc -ffp-contract=off, op-for-op port) returns BITWISE-identical
-    (alpha, rho) to the numpy fast path over a battery that includes
+def test_native_loop_bitwise_equals_general_loop():
+    """The compiled no-shrink loop (_smo_native, gcc -ffp-contract=off,
+    op-for-op port) returns BITWISE-identical (alpha, rho) to the numpy
+    loop (_smo_solve_general) over a battery that includes
     iteration-capped degenerate duals (duplicated rows force the
     zigzag regime where the cap binds, so deep trajectories are
     compared, not just early-converged ones)."""
@@ -121,7 +122,7 @@ def test_native_loop_bitwise_equals_numpy_fast_path():
         K = smo.KERNELS["rbf" if trial % 2 else "linear"](X, X, 1.0 / d)
         C = float(rng.choice([0.5, 1.0, 10.0]))
         mi = max(10_000, min(100 * n, 250_000))
-        a_np, r_np = smo._smo_solve_noshrink_np(K, y, C, 1e-3, mi)
+        a_np, r_np = smo._smo_solve_general(K, y, C, 1e-3, mi)
         a_c, r_c = smo._smo_solve_noshrink_native(lib, K, y, C, 1e-3, mi)
         assert np.array_equal(a_np, a_c)
         assert r_np == r_c
@@ -234,3 +235,51 @@ def test_native_load_is_thread_safe(monkeypatch):
     assert not any(t.is_alive() for t in threads)
     assert got[0] is not None
     assert all(h is got[0] for h in got)
+
+
+def test_native_fallback_warns_once_and_solves_the_same(monkeypatch,
+                                                        tmp_path):
+    """A failed native build is loud: the first load() in the process
+    emits one RuntimeWarning naming the reason, later calls stay
+    silent, and smo_solve then returns the numpy loop's result."""
+    import warnings
+
+    from parallel_svms_spark.ml import _smo_native, smo
+
+    def no_gcc(so_path):
+        raise FileNotFoundError(2, "No such file or directory", "gcc")
+
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))  # nothing cached
+    monkeypatch.setattr(_smo_native, "_build", no_gcc)
+    monkeypatch.setattr(_smo_native, "_lib", None)
+    monkeypatch.setattr(_smo_native, "_tried", False)
+    rng = np.random.default_rng(9)
+    X = rng.standard_normal((120, 6))
+    y = np.where(X[:, 0] + 0.5 * rng.standard_normal(120) > 0, 1.0, -1.0)
+    K = rbf_kernel(X, X, 1.0 / 6)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert _smo_native.load() is None
+        assert _smo_native.load() is None
+        alpha, rho = smo_solve(K, y)
+    msgs = [str(w.message) for w in caught
+            if issubclass(w.category, RuntimeWarning)]
+    assert len(msgs) == 1 and "no gcc" in msgs[0], msgs
+    want_alpha, want_rho = smo._smo_solve_general(K, y, 1.0, 1e-3, 12_000)
+    assert np.array_equal(alpha, want_alpha)
+    assert rho == want_rho
+
+
+@pytest.mark.parametrize("bad", ["nan", "inf", "labels"])
+def test_train_svc_rejects_bad_input(bad):
+    """One NaN or inf feature, or one label too many, raises instead of
+    training."""
+    X = np.random.default_rng(4).standard_normal((40, 3))
+    y = np.repeat([0, 1], 20)
+    if bad == "labels":
+        y = np.append(y, 1)
+    else:
+        X[17, 1] = float(bad)
+    with pytest.raises(ValueError, match="labels" if bad == "labels"
+                       else "NaN or inf"):
+        train_svc(X, y)
