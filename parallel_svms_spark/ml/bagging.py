@@ -27,11 +27,20 @@ def bagging_train(df: DataFrame, k: int, C: float = 1.0,
                   ) -> tuple[dict[int, SVCModel], DataFrame]:
     """Train k independent per-subset models; returns
     ({bucket: model}, all SVs unioned — the `base-model-SVs` output of
-    Bagging1.java:127-131)."""
+    Bagging1.java:127-131).
+
+    Raises ``ValueError`` when no bucket holds two classes: every model
+    would then have no support vector.
+    """
     cur = balanced_buckets(df, k)
     fit = trainer.fit_buckets(cur, C=C, gamma=gamma, kernel=kernel,
                               with_model=True, k=k).localCheckpoint()
-    return trainer.collect_models(fit), trainer.svs_only(fit)
+    models = trainer.collect_models(fit)
+    if all(m.n_sv == 0 for m in models.values()):
+        # only a single-class bucket trains to no SVs
+        raise ValueError(f"bagging_train: no bucket of {k} held two "
+                         "classes, so no model has a support vector")
+    return models, trainer.svs_only(fit)
 
 
 def bagging_predict(df: DataFrame, models: dict[int, SVCModel],

@@ -71,6 +71,9 @@ def iterative_train(df: DataFrame, k: int, C: float = 1.0,
     errorsum strictly improved, after ``MAX_ITERATIONS`` rounds at most
     (`while (newerrorsum < olderrorsum && iteration < 3)`,
     Iterative_svm/Driver.java:85).
+
+    Raises ``ValueError`` when no bucket holds two classes: the first
+    round then finds no support vector, and no later round can.
     """
     spark = df.sparkSession
     base = balanced_buckets(df, k).localCheckpoint()
@@ -91,6 +94,11 @@ def iterative_train(df: DataFrame, k: int, C: float = 1.0,
                .sort_values("vec_id", kind="mergesort")
                .drop_duplicates("vec_id"))
         gsv = pd.concat([gsv, new], ignore_index=True)
+        if gsv.empty:
+            # only a single-class bucket trains to no SVs
+            raise ValueError(f"iterative_train: no bucket of {k} held two "
+                             "classes, so the first round found no "
+                             "support vector")
         if len(errorsums) > 1 and not errorsums[-1] < errorsums[-2]:
             break
     return spark.createDataFrame(gsv, GSV_SCHEMA), errorsums

@@ -259,18 +259,28 @@ class SVCModel:
         return K_sv[:, idx] @ coef - self.rhos[pair]
 
     def predict(self, X: np.ndarray) -> np.ndarray:
-        """OvO vote; ties → lowest class index (LibSVM's argmax-first)."""
+        """OvO vote; ties → lowest class index (LibSVM's argmax-first).
+
+        Every pair's decision comes from one GEMM, ``K_sv @ W - rho``,
+        against a dense (n_sv × pairs) coefficient matrix ``W``. Its
+        decision values may round differently from ``decision_pair``'s
+        gathers, so the predictions are what is pinned, not the floats.
+        """
         if len(X) == 0:
             return np.empty(0, dtype=self.classes.dtype)
         K_sv = KERNELS[self.kernel](np.asarray(X, dtype=np.float64),
                                     self.X_sv, self.gamma)
         k = len(self.classes)
+        pairs = [(a, b) for a in range(k) for b in range(a + 1, k)]
+        W = np.zeros((self.n_sv, len(pairs)))
+        for p, pair in enumerate(pairs):
+            idx, coef = self.pair_coefs[pair]
+            W[idx, p] = coef
+        pos = K_sv @ W - np.array([self.rhos[p] for p in pairs]) > 0
         votes = np.zeros((len(X), k), dtype=np.int64)
-        for a in range(k):
-            for b in range(a + 1, k):
-                d = self.decision_pair(K_sv, (a, b))
-                votes[:, a] += d > 0
-                votes[:, b] += ~(d > 0)
+        for p, (a, b) in enumerate(pairs):
+            votes[:, a] += pos[:, p]
+            votes[:, b] += ~pos[:, p]
         return self.classes[np.argmax(votes, axis=1)]
 
     def to_dict(self) -> dict:

@@ -6,6 +6,14 @@ process may run on) and a ``$SPARK_GRAFT_DRIVER_MEM`` driver heap
 is what we would ship to a 1000-executor cluster (AQE on, adaptive
 skew-join, Arrow for the Pandas-UDF path, UTC session TZ so results
 hash-match a UTC-naive DuckDB oracle).
+
+Its Python workers fork from ``_worker_daemon`` instead of
+``pyspark.daemon``. Spark calls ``importlib.invalidate_caches()``
+before every Python task, and on CPython 3.11-3.12 that makes each
+cached zip importer re-read its archive (the Spark jar and pyspark.zip
+on the workers' path): 150-300 ms of CPU per task. The daemon's zip
+importers keep the index they read once. A session this module did not
+build (such as an external driver's) keeps the stock daemon.
 """
 
 from __future__ import annotations
@@ -13,6 +21,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds the parallel_svms_spark package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def local_resources(environ, n_cpus: int, phys_bytes: int
@@ -36,6 +47,13 @@ def get_spark(app_name: str = "parallel_svms_spark",
     ``spark.sql.shuffle.partitions`` defaults to the local core count —
     on a real cluster this would be ~2-3× total executor cores; AQE
     coalesces downward at runtime either way.
+
+    The Python workers start from ``parallel_svms_spark._worker_daemon``
+    (see the module docstring), so the package's root goes on their
+    path through ``spark.executorEnv.PYTHONPATH``; Spark merges it with
+    the environment's ``PYTHONPATH``. Without it, a driver that imports
+    the package only through its own ``sys.path`` could start no Python
+    worker at all.
     """
     cpus, driver_mem = local_resources(
         os.environ, len(os.sched_getaffinity(0)),
@@ -60,6 +78,9 @@ def get_spark(app_name: str = "parallel_svms_spark",
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module",
+                "parallel_svms_spark._worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

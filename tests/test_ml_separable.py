@@ -409,16 +409,32 @@ def test_cascade_shed_log_zero_when_cap_inactive(blobs):
     assert stats["shed"] == [0] * len(stats["layers"])
 
 
+def _one_class_per_bucket(spark, n_cls):
+    """200 rows labelled ``vec_id % n_cls``: with n_cls=1 every bucket
+    holds one class, and with n_cls=2 every bucket of k=2 does."""
+    rng = np.random.default_rng(5)
+    rows = [(i, i % n_cls, [float(v) for v in rng.standard_normal(4)])
+            for i in range(200)]
+    return spark.createDataFrame(
+        rows, "vec_id long, label int, embedding array<float>")
+
+
 @pytest.mark.parametrize("n_cls, k", [(1, 4), (2, 2)])
 def test_cascade_raises_when_no_bucket_holds_two_classes(spark, n_cls, k):
     """Single-class buckets train to no SVs, so nothing reaches the
     merge: one class in all the data (k=4), or label = vec_id % 2 with
     k=2, so each ``mod`` bucket holds one class. A clear ValueError,
     not a bare StopIteration from the missing model row."""
-    rng = np.random.default_rng(5)
-    rows = [(i, i % n_cls, [float(v) for v in rng.standard_normal(4)])
-            for i in range(200)]
-    df = spark.createDataFrame(
-        rows, "vec_id long, label int, embedding array<float>")
     with pytest.raises(ValueError, match="two classes"):
-        cascade_train(df, k=k, gamma=0.25)
+        cascade_train(_one_class_per_bucket(spark, n_cls), k=k, gamma=0.25)
+
+
+@pytest.mark.parametrize("train", [bagging_train, iterative_train])
+@pytest.mark.parametrize("n_cls, k", [(1, 4), (2, 2)])
+def test_bagging_and_iterative_raise_when_no_bucket_holds_two_classes(
+        spark, train, n_cls, k):
+    """The same input as the cascade test above. Bagging would return
+    only 0-SV models, and iterative an empty global SV set, which a
+    final ``fit_buckets(k=1)`` fits to no model row."""
+    with pytest.raises(ValueError, match="two classes"):
+        train(_one_class_per_bucket(spark, n_cls), k=k, gamma=0.25)

@@ -283,3 +283,34 @@ def test_train_svc_rejects_bad_input(bad):
     with pytest.raises(ValueError, match="labels" if bad == "labels"
                        else "NaN or inf"):
         train_svc(X, y)
+
+
+def _predict_pair_loop(model, X):
+    """The per-pair decision loop ``SVCModel.predict`` ran before its
+    single GEMM: one column gather and matrix-vector product per pair."""
+    K_sv = rbf_kernel(X, model.X_sv, model.gamma)
+    k = len(model.classes)
+    votes = np.zeros((len(X), k), dtype=np.int64)
+    for a in range(k):
+        for b in range(a + 1, k):
+            idx, coef = model.pair_coefs[(a, b)]
+            d = K_sv[:, idx] @ coef - model.rhos[(a, b)]
+            votes[:, a] += d > 0
+            votes[:, b] += ~(d > 0)
+    return model.classes[np.argmax(votes, axis=1)]
+
+
+@pytest.mark.parametrize("n_cls", [1, 2, 3, 10])
+def test_gemm_predict_equals_pair_loop(n_cls):
+    """Overlapping seeded blobs, so many holdout rows sit near a pair's
+    boundary: the GEMM decisions must vote exactly as the pair loop."""
+    rng = np.random.default_rng(40 + n_cls)
+    d = 8
+    centers = rng.standard_normal((n_cls, d))
+    y = rng.integers(0, n_cls, size=600)
+    X = centers[y] + rng.standard_normal((600, d))
+    model = train_svc(X[:400], y[:400], gamma=1.0 / d)
+    assert len(model.classes) == n_cls
+    got = model.predict(X[400:])
+    assert np.array_equal(got, _predict_pair_loop(model, X[400:]))
+    assert got.dtype == model.classes.dtype
