@@ -1,4 +1,4 @@
-"""Native (C) build of the SMO no-shrink inner loop.
+"""Native (C) build of the SMO loop.
 
 The numpy loop, ``smo._smo_solve_general``, spends its time in
 per-iteration ufunc dispatch: ~12 short vector ops per iteration whose
@@ -44,8 +44,9 @@ import warnings
 
 C_SOURCE = r"""
 #include <math.h>
+#include <stdlib.h>
 
-/* Bit-for-bit port of smo._smo_solve_noshrink's iteration loop.
+/* Bit-for-bit port of smo._smo_solve_general's iteration loop.
    K: n*n row-major Gram matrix; Kd: its diagonal; y: +/-1.0 labels.
    alpha (len n) and grad (len n) are caller-allocated outputs; they
    are initialized here (alpha=0, grad=-1) and left holding the final
@@ -170,10 +171,6 @@ int smo_noshrink_loop(const double *K, const double *Kd, const double *y,
     return 0;
 }
 """
-
-# malloc/free live in stdlib.h; keep the include explicit
-C_SOURCE = C_SOURCE.replace("#include <math.h>",
-                            "#include <math.h>\n#include <stdlib.h>")
 
 _CFLAGS = ["-O2", "-fPIC", "-shared", "-ffp-contract=off"]
 

@@ -10,21 +10,20 @@ retrains on the surviving SVs and writes the model
 
 Spark rewrite: the merge tree is a fixed binary tree (Graf et al.,
 NIPS 2004), so any subtree computes the same thing wherever it runs.
-Layer 0 is one grouped-map stage with one task per bucket (its size is
-unknown until it runs). Once a layer's SVs fit one bucket's row cap —
-or only the final retrain is left — a single grouped-map task runs
-every remaining merge and the final retrain in process, bucket by
-bucket, with the same per-bucket function. Layers in between (the cap
-off, or more SVs than it) run as their own one-task-per-bucket stages.
-The stage directories become a ``bucket`` column; ``localCheckpoint``
-of each stage's output replaces the per-job HDFS materialization
-(lineage truncation only — SURVEY §4.3.3).
+The cascade is one query with two grouped-map stages. Layer 0 trains
+one task per bucket; a shuffle into one partition then feeds its SV
+and stat rows to ONE task that runs every merge layer and the final
+retrain in process, bucket by bucket, with the same per-bucket
+function — the reference's single last reducer, extended to the
+whole tree below layer 0. The driver reads the tail's output once.
 
-Scale: each training group stays subset-sized, and no dual is larger
-than one capped bucket: the tail collapses only when all its rows are
-within the cap. For 100 TB pick k so that |subset| ≈ 10⁴ rows; layer 0
-is cluster-parallel, and a bucket task's one-vs-one pairs run on
-threads.
+Scale: no dual is larger than one capped bucket (``max_rows_per_bucket``
+re-caps every merged bucket before it trains), but the tail task holds
+all of layer 0's SV rows at once: at most k·cap rows, and no more than
+the input (43 MB for the paper's 42k×256 float32 MNIST). Layer 0 is
+cluster-parallel; below it the merge layers run one after another on
+one executor, whose cores the one-vs-one pair threads still use. For
+100 TB pick k so that |subset| ≈ 10⁴ rows.
 """
 
 from __future__ import annotations
@@ -38,6 +37,8 @@ from parallel_svms_spark.ml.smo import SVCModel
 from parallel_svms_spark.operators.partitioning import balanced_buckets
 
 SV_COLUMNS = ["bucket", "vec_id", "label", "embedding", "w"]
+# the returned SV frame's columns, as ``trainer.svs_only`` selects them
+SVS_SCHEMA = "bucket int, vec_id long, label int, embedding array<float>"
 
 
 def _validate_k(k: int) -> None:
@@ -47,35 +48,37 @@ def _validate_k(k: int) -> None:
         raise ValueError(f"k must be a power of two ≥ 2, got {k}")
 
 
-def _merge_tail(svs: DataFrame, n_buckets: int, fit_kw: dict
-                ) -> DataFrame:
-    """Every merge after a layer of ``n_buckets`` buckets (``svs``: its
-    SV rows, in SV_COLUMNS), down to and including the final retrain,
-    in ONE grouped-map task: pair-merge (bucket // 2), train each
-    merged bucket with ``trainer.train_bucket``, repeat until one
-    bucket is left. Emits the final SV rows, its model row and every
-    bucket's stat row, with ``layer`` counted from the tail's first
-    merge.
+def _merge_tail(fit: DataFrame, k: int, fit_kw: dict) -> DataFrame:
+    """Every merge after layer 0, down to and including the final
+    retrain, in ONE grouped-map task. ``fit`` is layer 0's FIT_SCHEMA
+    output over ``k`` buckets: its stat rows pass through, and its SV
+    rows are pair-merged (bucket // 2), each merged bucket trained with
+    ``trainer.train_bucket``, until one bucket is left. Emits the final
+    SV rows, its model row and every bucket's stat row, ``layer``
+    counting merge layers from layer 0.
 
     It runs in a Spark task, not on the driver: Python workers pin
     BLAS to one thread, as every bucket task is, so the Gram matrices
     round exactly as in a layer-per-stage run.
     """
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        n, layer, extra = n_buckets, 0, []
+        is_sv = pdf["kind"] == "sv"
+        extra = pdf[~is_sv].to_dict("records")
+        pdf = pdf.loc[is_sv, SV_COLUMNS]
+        n, layer = k, 0
         while n > 1 and len(pdf):
+            n, layer = n // 2, layer + 1
             pdf = pdf.assign(bucket=pdf["bucket"] // 2)
-            n //= 2
             fits = [trainer.train_bucket(g, with_model=n == 1, **fit_kw)
                     for _, g in pdf.groupby("bucket", sort=True)]
-            for _, rows in fits:
-                extra += [{**r, "layer": layer} for r in rows]
+            extra += [{**r, "layer": layer} for _, rows in fits for r in rows]
             pdf = pd.concat([sv for sv, _ in fits], ignore_index=True)
-            layer += 1
         return trainer.fit_rows(pdf, extra)
 
-    # one partition (narrow, no exchange) under a constant group key
-    return (svs.coalesce(1).groupBy(F.lit(0).alias("tail"))
+    # a shuffle into one partition, not coalesce(1), which would run
+    # layer 0 inside the tail's task; the constant group key then
+    # needs no second exchange
+    return (fit.repartition(1).groupBy(F.lit(0).alias("tail"))
             .applyInPandas(run, trainer.FIT_SCHEMA))
 
 
@@ -86,16 +89,19 @@ def cascade_train(df: DataFrame, k: int, C: float = 1.0,
                   ) -> tuple[SVCModel, DataFrame]:
     """Train cascade SVM; returns (final model, final SV DataFrame).
 
-    Layer 0 is one ``trainer.fit_buckets`` stage, one task per bucket.
-    Its stat rows give the layer's SV count without a count job; if
-    that count is within ``max_rows_per_bucket``, one task runs the
-    rest of the tree (``_merge_tail``). Otherwise the next layer is
-    another one-task-per-bucket stage, and so on; when two buckets are
-    left, the final merge and retrain run in one task either way.
-    With the cap off (``None``) only that final retrain is one task.
-    Inside every task ``smo.train_svc`` solves the one-vs-one pairs on
-    threads, so the narrow tip still uses the task's cores. Same SVs
-    and model as training every layer as its own stage.
+    One Spark query: layer 0 is one ``trainer.fit_buckets`` stage, one
+    task per bucket, and ``_merge_tail`` runs the rest of the tree in
+    one task. Inside every task ``smo.train_svc`` solves the
+    one-vs-one pairs on threads, so the narrow tip still uses the
+    task's cores. Same SVs and model as training every layer as its
+    own stage. The driver collects the tail's output once — the final
+    SV rows, the model row and the stat rows — and returns the final
+    SVs as a local DataFrame (bucket, vec_id, label, embedding).
+
+    Trade: the tail task holds all of layer 0's SV rows (at most
+    k·``max_rows_per_bucket``), and on a multi-executor cluster the
+    wide merge layers run one after another on that task's executor,
+    not spread over the cluster.
 
     df columns: vec_id, label, embedding. Pass ``stats_out={}`` to
     receive ``{"layers": [(n_buckets, n_rows), ...], "shed": [...]}``
@@ -113,65 +119,36 @@ def cascade_train(df: DataFrame, k: int, C: float = 1.0,
     default change): any caller whose layer buckets exceed 20k rows
     gets a documented deterministic subsample instead of the full
     dual** — pass ``None`` to disable the cap (the reference
-    semantics: Lastcascade.java:109-144 retrains whatever survives),
-    and read ``stats_out["shed"]`` to see whether the cap fired at
-    all. A merge layer is shed lowest-|α| first, using the ``w`` the
-    previous layer's fit emitted; layer-0 rows were never trained, so
-    the first cap is the stratified coin.
+    semantics: Lastcascade.java:109-144 retrains whatever survives;
+    then neither the duals nor the tail's rows are bounded), and read
+    ``stats_out["shed"]`` to see whether the cap fired at all. A merge
+    layer is shed lowest-|α| first, using the ``w`` the previous
+    layer's fit emitted; layer-0 rows were never trained, so the first
+    cap is the stratified coin.
 
     Raises ``ValueError`` when no layer-0 bucket holds two classes: no
     support vector would then reach the merge, and there is no model.
     """
     _validate_k(k)
-    cap = max_rows_per_bucket
-    fit_kw = dict(C=C, gamma=gamma, kernel=kernel, max_rows_per_bucket=cap)
-    layers: list[tuple[int, int]] = []
-    shed: list[int] = []
-
-    def _read_stats(rows: list, n_buckets: int) -> int:
-        # per-layer totals of a fit's stat rows, whose first layer has
-        # n_buckets buckets; returns the last layer's SV count
-        totals: dict[int, list[int]] = {}
-        for r in rows:
-            if r.kind == "stat":
-                t = totals.setdefault(r.layer, [0, 0, 0])
-                t[0] += r.n_in - r.n_shed
-                t[1] += r.n_shed
-                t[2] += r.n_sv
-        for layer in sorted(totals):
-            layers.append((n_buckets >> layer, totals[layer][0]))
-            shed.append(totals[layer][1])
-        return totals[max(totals)][2] if totals else 0
-
-    n_buckets = k
-    # localCheckpoint truncates lineage between stages (the reference
-    # got this implicitly by materializing each job to HDFS)
-    fit = trainer.fit_buckets(balanced_buckets(df, k), k=k,
-                              **fit_kw).localCheckpoint()
-    while True:
-        n_sv = _read_stats(fit.filter(fit.kind == "stat").collect(),
-                           n_buckets)
-        if n_sv == 0:
-            # only a single-class bucket trains to no SVs
-            raise ValueError(
-                f"cascade_train: no bucket of {n_buckets} held two "
-                "classes, so no support vector reached the merge")
-        svs = fit.filter(fit.kind == "sv").select(*SV_COLUMNS)
-        if n_buckets == 2 or (cap is not None and n_sv <= cap):
-            break
-        # pair-merge into a stage of its own; each task re-caps its
-        # ≤2·cap merged rows to ≤cap before training
-        n_buckets //= 2
-        fit = trainer.fit_buckets(
-            svs.withColumn("bucket", F.floor(F.col("bucket") / 2)
-                           .cast("int")),
-            k=n_buckets, **fit_kw).localCheckpoint()
-    # the remaining merges and the final retrain (Lastcascade.java:
-    # 109-144) in one task, like the reference's single reducer
-    fit = _merge_tail(svs, n_buckets, fit_kw).localCheckpoint()
-    meta = fit.filter(fit.kind != "sv").collect()
-    _read_stats(meta, n_buckets // 2)
+    fit_kw = dict(C=C, gamma=gamma, kernel=kernel,
+                  max_rows_per_bucket=max_rows_per_bucket)
+    layer0 = trainer.fit_buckets(balanced_buckets(df, k), k=k, **fit_kw)
+    out = _merge_tail(layer0, k, fit_kw).toPandas()
+    models = trainer.models_of(out.itertuples())
+    if not models:
+        # only a single-class bucket trains to no SVs, and a merge
+        # layer always receives SVs of two classes
+        raise ValueError(
+            f"cascade_train: no bucket of {k} held two classes, so no "
+            "support vector reached the merge")
     if stats_out is not None:
-        stats_out.update(layers=layers, shed=shed)
-    (model,) = trainer.models_of(meta).values()
-    return model, trainer.svs_only(fit)
+        per = (out[out["kind"] == "stat"]
+               .assign(n_train=lambda s: s["n_in"] - s["n_shed"])
+               .groupby("layer", sort=True)[["n_train", "n_shed"]].sum())
+        stats_out.update(
+            layers=[(k >> int(l), int(n)) for l, n in per["n_train"].items()],
+            shed=[int(n) for n in per["n_shed"]])
+    (model,) = models.values()
+    svs = out.loc[out["kind"] == "sv", ["bucket", "vec_id", "label",
+                                         "embedding"]]
+    return model, df.sparkSession.createDataFrame(svs, SVS_SCHEMA)

@@ -101,11 +101,23 @@ def smo_solve(K: np.ndarray, y: np.ndarray, C: float = 1.0,
     variables saves row work. This solver precomputes the Gram
     matrix, so there is no row work to save, and the α it reaches is
     eps-KKT either way.
+
+    The loop runs compiled when the host can build it, else as
+    ``_smo_solve_general`` (``_smo_native.load`` warns once per process
+    when it cannot). In numpy the per-iteration cost is ufunc dispatch,
+    not arithmetic: ~12 short vector ops whose fixed overhead dominates
+    at bucket sizes. The C loop is a bit-for-bit port of the numpy one
+    (same ops, same operand order, IEEE doubles, no FMA contraction —
+    ``_smo_native`` docstring), so both return the same (alpha, rho).
     """
     n = len(y)
     if max_iter is None:
         max_iter = max(10_000, min(100 * n, 250_000))
-    return _smo_solve_noshrink(K, y, C, eps, max_iter)
+    from parallel_svms_spark.ml import _smo_native
+    lib = _smo_native.load()
+    if lib is not None:
+        return _smo_solve_noshrink_native(lib, K, y, C, eps, max_iter)
+    return _smo_solve_general(K, y, C, eps, max_iter)
 
 
 def _smo_solve_general(K: np.ndarray, y: np.ndarray, C: float,
@@ -189,22 +201,6 @@ def _rho_epilogue(y: np.ndarray, alpha: np.ndarray, grad: np.ndarray,
     return (ub + lb) / 2.0
 
 
-def _smo_solve_noshrink(K: np.ndarray, y: np.ndarray, C: float,
-                        eps: float, max_iter: int):
-    """Run the SMO loop compiled when the host can build it, else
-    ``_smo_solve_general`` (``_smo_native.load`` warns once per process
-    when it cannot). In numpy the per-iteration cost is ufunc dispatch,
-    not arithmetic: ~12 short vector ops whose fixed overhead dominates
-    at bucket sizes. The C loop is a bit-for-bit port of the numpy one
-    (same ops, same operand order, IEEE doubles, no FMA contraction —
-    ``_smo_native`` docstring), so both return the same (alpha, rho)."""
-    from parallel_svms_spark.ml import _smo_native
-    lib = _smo_native.load()
-    if lib is not None:
-        return _smo_solve_noshrink_native(lib, K, y, C, eps, max_iter)
-    return _smo_solve_general(K, y, C, eps, max_iter)
-
-
 def _smo_solve_noshrink_native(lib, K: np.ndarray, y: np.ndarray,
                                C: float, eps: float, max_iter: int):
     import ctypes
@@ -254,17 +250,14 @@ class SVCModel:
     def n_sv(self) -> int:
         return len(self.X_sv)
 
-    def decision_pair(self, K_sv: np.ndarray, pair) -> np.ndarray:
-        idx, coef = self.pair_coefs[pair]
-        return K_sv[:, idx] @ coef - self.rhos[pair]
-
     def predict(self, X: np.ndarray) -> np.ndarray:
         """OvO vote; ties → lowest class index (LibSVM's argmax-first).
 
         Every pair's decision comes from one GEMM, ``K_sv @ W - rho``,
         against a dense (n_sv × pairs) coefficient matrix ``W``. Its
-        decision values may round differently from ``decision_pair``'s
-        gathers, so the predictions are what is pinned, not the floats.
+        decision values may round differently from a per-pair gather
+        ``K_sv[:, idx] @ coef``, so the predictions are what is pinned,
+        not the floats.
         """
         if len(X) == 0:
             return np.empty(0, dtype=self.classes.dtype)
@@ -322,9 +315,10 @@ def train_svc(X: np.ndarray, y: np.ndarray, C: float = 1.0,
     Python worker is pinned to one thread) only under
     ``OMP_NUM_THREADS=1``.
 
-    Raises ``ValueError`` when ``X`` holds a NaN or an infinity, or
+    Raises ``ValueError`` when ``X`` holds a NaN or an infinity, when
+    ``y`` holds a NaN (a null Spark label reaches a task as one), or
     when ``y`` does not have one label per row of ``X``: a NaN feature
-    would otherwise train a model without any error.
+    or label would otherwise train a model without any error.
     """
     X = np.asarray(X, dtype=np.float64)
     y = np.asarray(y)
@@ -335,6 +329,10 @@ def train_svc(X: np.ndarray, y: np.ndarray, C: float = 1.0,
         bad = np.flatnonzero(~np.isfinite(X).all(axis=1))
         raise ValueError(f"train_svc: {len(bad)} rows of X hold NaN or "
                          f"inf (first at row {bad[0]})")
+    if y.dtype.kind == "f" and np.isnan(y).any():
+        bad = np.flatnonzero(np.isnan(y))
+        raise ValueError(f"train_svc: {len(bad)} labels are NaN or "
+                         f"missing (first at row {bad[0]})")
     if gamma is None:
         gamma = 1.0 / X.shape[1]
     elif gamma == "scale":

@@ -18,7 +18,7 @@ One trainer path: every bucket of every cascade layer, iterative
 round, bagging fit and final retrain is one ``train_bucket`` call —
 in its own task under ``fit_buckets`` or under an iterative round's
 grouped map (``iterative._round_fit``), or in sequence inside the one
-task that runs the cascade's narrow tail — and inside it
+task that runs every cascade layer after layer 0 — and inside it
 ``smo.train_svc`` solves the one-vs-one pairs on threads. A narrow
 layer (few buckets) therefore still uses the executor's cores without
 replicating rows across pairs.
@@ -43,8 +43,8 @@ from parallel_svms_spark.ml import smo
 #                   SVCModel (S4); ``models_of`` decodes it
 #   kind='stat'   → one row per trained bucket: n_in rows arrived,
 #                   n_shed of them the row cap dropped, n_sv SVs came
-#                   out; ``layer`` counts merge layers from the fit's
-#                   first (always 0 for ``fit_buckets``)
+#                   out; ``layer`` counts cascade merge layers from
+#                   layer 0 (always 0 for ``fit_buckets``)
 # w: on 'sv' rows, the row's largest |dual coef| over the bucket
 # model's pairs (= its max α); ``cap_bucket_rows`` sheds the smallest
 # first. Null on the other kinds.

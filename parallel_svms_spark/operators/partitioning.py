@@ -87,7 +87,7 @@ def merge_pairs(df_with_bucket: DataFrame) -> DataFrame:
     keyed ``floor(taskId/2)`` and the reducer count halves each layer
     (cascade_svm/Midcascade.java:6,126-127,133-138; loop at
     cascade_svm/Driver.java:91-100). One layer = re-key + regroup; the
-    full cascade is the driver loop in ml/cascade.py.
+    full cascade runs every merge layer in one task (ml/cascade.py).
 
     Scale: this is exactly the ``treeAggregate`` shape — per-layer
     shuffle volume halves, so the whole cascade moves ≤2× the SV bytes

@@ -385,9 +385,8 @@ def _layer_by_layer(df, k, gamma, cap):
 def test_cascade_tail_equals_layer_by_layer(degenerate, k, cap):
     """Running the merge tail in one task computes the same tree: the
     same SV ids, the same model (``to_dict``) and the same per-layer
-    stats as a stage per layer. Cap 60 fires on layer 0 and every
-    merge layer (stages, then a final-retrain tail); 20000 never fires
-    (all merges in the tail); None is the cap off."""
+    stats as a stage per layer. Cap 60 fires on layer 0 and on every
+    merge layer in the tail; 20000 never fires; None is the cap off."""
     df, _, dim = degenerate
     stats: dict = {}
     model, svs = cascade_train(df, k=k, gamma=1.0 / dim,
@@ -397,6 +396,23 @@ def test_cascade_tail_equals_layer_by_layer(degenerate, k, cap):
     assert model.to_dict() == ref.to_dict()
     assert stats == {"layers": layers, "shed": shed}
     assert (cap == 60) == (sum(shed) > 0)
+
+
+def test_cascade_is_one_query(spark, degenerate):
+    """The whole cascade, stats included, runs as one query: at most 3
+    Spark jobs (layer 0's shuffle, the tail's shuffle, the collect) at
+    k=8 with cap 60 firing on every layer, where a stage per wide
+    layer and the stat collects between them took 11."""
+    df, _, dim = degenerate
+    sc = spark.sparkContext
+    sc.setJobGroup("cascade_is_one_query", "cascade job count")
+    try:
+        cascade_train(df, k=8, gamma=1.0 / dim, max_rows_per_bucket=60,
+                      stats_out={})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("cascade_is_one_query")
+    assert len(jobs) <= 3, sorted(jobs)
 
 
 def test_cascade_shed_log_zero_when_cap_inactive(blobs):

@@ -38,8 +38,9 @@ def test_roundtrip_predictions_identical():
     K1 = rbf_kernel(X, m.X_sv, m.gamma)
     K2 = rbf_kernel(X, m2.X_sv, m2.gamma)
     for pair in m.pair_coefs:
-        d1 = m.decision_pair(K1, pair)
-        d2 = m2.decision_pair(K2, pair)
+        (i1, c1), (i2, c2) = m.pair_coefs[pair], m2.pair_coefs[pair]
+        d1 = K1[:, i1] @ c1 - m.rhos[pair]
+        d2 = K2[:, i2] @ c2 - m2.rhos[pair]
         assert np.allclose(d1, d2, atol=1e-10)
 
 

@@ -270,18 +270,22 @@ def test_native_fallback_warns_once_and_solves_the_same(monkeypatch,
     assert rho == want_rho
 
 
-@pytest.mark.parametrize("bad", ["nan", "inf", "labels"])
+@pytest.mark.parametrize("bad", ["nan", "inf", "labels", "nan_label"])
 def test_train_svc_rejects_bad_input(bad):
-    """One NaN or inf feature, or one label too many, raises instead of
+    """One NaN or inf feature, one label too many, or one NaN label (a
+    null ``label int`` reaches a Spark task as NaN) raises instead of
     training."""
     X = np.random.default_rng(4).standard_normal((40, 3))
     y = np.repeat([0, 1], 20)
     if bad == "labels":
         y = np.append(y, 1)
+    elif bad == "nan_label":
+        y = y.astype(np.float64)
+        y[17] = np.nan
     else:
         X[17, 1] = float(bad)
-    with pytest.raises(ValueError, match="labels" if bad == "labels"
-                       else "NaN or inf"):
+    match = {"labels": "labels", "nan_label": "labels are NaN"}
+    with pytest.raises(ValueError, match=match.get(bad, "NaN or inf")):
         train_svc(X, y)
 
 
