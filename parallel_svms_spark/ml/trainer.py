@@ -229,8 +229,11 @@ def vote_df(df: DataFrame, models: list[smo.SVCModel],
     """Majority vote of ``models`` per row (columns id, [label,] pred);
     ties go to the lowest class. One model's vote is its ``predict``.
     The model objects are broadcast once, so each Python worker
-    unpickles them once; they score map-side, batch by batch.
+    unpickles them once; they score map-side, batch by batch. No models
+    is a ``ValueError`` here, not a failure in every Spark task.
     """
+    if not models:
+        raise ValueError("vote_df needs at least one model")
     bc = df.sparkSession.sparkContext.broadcast(models)
     has_label = label_col in df.columns
     cols = [id_col, features_col] + ([label_col] if has_label else [])

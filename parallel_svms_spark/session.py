@@ -12,18 +12,53 @@ Its Python workers fork from ``_worker_daemon`` instead of
 before every Python task, and on CPython 3.11-3.12 that makes each
 cached zip importer re-read its archive (the Spark jar and pyspark.zip
 on the workers' path): 150-300 ms of CPU per task. The daemon's zip
-importers keep the index they read once. A session this module did not
-build (such as an external driver's) keeps the stock daemon.
+importers keep the index they read once. The workers also start with
+pandas and pyarrow imported and the daemon's heap frozen, so the full
+collection ``pyspark.daemon`` runs after every task scans only what the
+task made.
+
+The JVM talks to those workers, and to the driver's
+``createDataFrame``/``toPandas`` data sockets, over Unix domain sockets
+instead of TCP loopback. Over loopback every task waited ~36 ms for its
+first Arrow batch: Nagle's algorithm on one end and delayed ACK on the
+other stall the small writes that open the stream. The socket files
+live in one private (0700) directory per process, ``socket_dir()``,
+under ``/tmp`` rather than ``$TMPDIR``: AF_UNIX paths are limited to
+108 bytes, and under a long ``TMPDIR`` (or ``java.io.tmpdir``, Spark's
+default) ``SparkContext`` fails at start with "AF_UNIX path too long".
+The directory is removed when the interpreter exits.
+
+A session this module did not build (such as an external driver's)
+keeps the stock daemon and TCP loopback.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
 # the directory that holds the parallel_svms_spark package
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@functools.cache
+def socket_dir() -> str:
+    """This process's private directory for Spark's Unix domain sockets.
+
+    Made once per process, mode 0700, under ``/tmp`` whatever
+    ``TMPDIR`` says, so that Spark's ``/.<uuid4>.sock`` names stay
+    within AF_UNIX's 108-byte path limit; removed, with any socket file
+    left in it, when the interpreter exits (a killed process leaves it
+    behind).
+    """
+    path = tempfile.mkdtemp(prefix="pss-", dir="/tmp")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def local_resources(environ, n_cpus: int, phys_bytes: int
@@ -54,6 +89,12 @@ def get_spark(app_name: str = "parallel_svms_spark",
     the environment's ``PYTHONPATH``. Without it, a driver that imports
     the package only through its own ``sys.path`` could start no Python
     worker at all.
+
+    The JVM, the workers and the driver's data sockets connect over Unix
+    domain sockets in ``socket_dir()`` (see the module docstring).
+    Spark skips its worker-auth secret on those sockets, so the
+    directory's 0700 mode is the access control: only this user can
+    connect.
     """
     cpus, driver_mem = local_resources(
         os.environ, len(os.sched_getaffinity(0)),
@@ -81,6 +122,8 @@ def get_spark(app_name: str = "parallel_svms_spark",
         .config("spark.python.daemon.module",
                 "parallel_svms_spark._worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", socket_dir())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

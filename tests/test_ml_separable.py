@@ -454,3 +454,19 @@ def test_bagging_and_iterative_raise_when_no_bucket_holds_two_classes(
     final ``fit_buckets(k=1)`` fits to no model row."""
     with pytest.raises(ValueError, match="two classes"):
         train(_one_class_per_bucket(spark, n_cls), k=k, gamma=0.25)
+
+
+class _NotADataFrame:
+    """Stands in for a DataFrame; any use of it fails the test."""
+
+    def __getattr__(self, name):
+        raise AssertionError(f"touched DataFrame.{name}")
+
+
+def test_vote_over_no_models_raises_on_the_driver():
+    """No models is an error before any Spark call, not a
+    ``PythonException`` from every scoring task at collect."""
+    with pytest.raises(ValueError, match="at least one model"):
+        trainer.vote_df(_NotADataFrame(), [])
+    with pytest.raises(ValueError, match="at least one model"):
+        bagging_predict(_NotADataFrame(), {})
