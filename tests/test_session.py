@@ -1,8 +1,9 @@
 """``session.local_resources``: get_spark's local core count and driver
 heap, checked without starting a session; the Unix-domain-socket
-transport and the Python workers of a ``get_spark`` session, checked on
-the suite's shared session; and the socket directory's path and
-lifetime, checked in subprocesses that start no JVM."""
+transport, the Python workers and the JIT level of a ``get_spark``
+session, checked on the suite's shared session; and the socket
+directory's path and lifetime, checked in subprocesses that start no
+JVM."""
 
 from __future__ import annotations
 
@@ -88,6 +89,19 @@ def test_shared_session_talks_over_private_unix_sockets(spark):
     assert _sock_path_len(d) <= 107  # AF_UNIX: 108 bytes with the NUL
     # the accumulator server binds its socket there when the context starts
     assert any(f.endswith(".sock") for f in os.listdir(d))
+
+
+def test_shared_session_jit_stops_at_c1(spark):
+    """get_spark's driver JVM runs with C1 only, so a query's generated
+    classes are compiled during its first run, not at a later run that
+    depends on the C2 queue."""
+    jvm = spark._jvm
+    assert "-XX:TieredStopAtLevel=1" in spark.sparkContext.getConf().get(
+        "spark.driver.defaultJavaOptions")
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName(
+            "com.sun.management.HotSpotDiagnosticMXBean"))
+    assert bean.getVMOption("TieredStopAtLevel").getValue() == "1"
 
 
 def _run_python(code: str, **env) -> str:
