@@ -31,7 +31,7 @@ from parallel_svms_spark.operators import timeseries as TS
 
 K_BUCKETS = 8  # reference runs k ∈ {2,4,8,16} (PDF slide 23); 8 is the middle
 SVM_K = 4      # bucket count for the ML qkeys (500-row embeddings at sf0.01)
-SVM_GAMMA = 2.0  # fixture embeddings are unit-norm → γ≈2 (see ml/smo.train_svc)
+SVM_GAMMA = 2.0  # fixture embeddings are unit-norm (‖a−b‖² ≈ 2), so γ=1/n_features would flatten the kernel
 
 
 # ---------------------------------------------------------------------------
@@ -45,7 +45,8 @@ def _svm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from parallel_svms_spark.ml import trainer
     emb = load_table(spark, sf_dir, "embeddings")
-    fit = trainer.fit_buckets(X.balanced_buckets(emb, SVM_K), gamma=SVM_GAMMA)
+    fit = trainer.fit_buckets(X.balanced_buckets(emb, SVM_K), k=SVM_K,
+                              gamma=SVM_GAMMA)
     return (trainer.svs_only(fit).groupBy("bucket")
             .agg(F.count("*").alias("n_sv")).orderBy("bucket"))
 

@@ -9,8 +9,9 @@ but absent from the code — implemented here as scoring + argmax-vote
 (documented addition, SURVEY §7.6).
 
 Scale: embarrassingly parallel — one shuffle to form buckets, then a
-single grouped-map stage; inference broadcasts the k models once and
-scores map-side (no shuffle at all).
+single grouped-map stage whose rows (models and SVs) the driver
+collects once; inference broadcasts the k models once and scores
+map-side (no shuffle at all).
 """
 
 from __future__ import annotations
@@ -23,24 +24,26 @@ from parallel_svms_spark.operators.partitioning import balanced_buckets
 
 
 def bagging_train(df: DataFrame, k: int, C: float = 1.0,
-                  gamma: float | None = None, kernel: str = "rbf",
+                  gamma: float | None = None,
                   ) -> tuple[dict[int, SVCModel], DataFrame]:
-    """Train k independent per-subset models; returns
-    ({bucket: model}, all SVs unioned — the `base-model-SVs` output of
-    Bagging1.java:127-131).
+    """Train k independent per-subset models in one Spark query;
+    returns ({bucket: model}, all SVs unioned as a local DataFrame —
+    the `base-model-SVs` output of Bagging1.java:127-131).
 
-    Raises ``ValueError`` when no bucket holds two classes: every model
-    would then have no support vector.
+    Raises ``ValueError`` before any Spark job when ``k`` < 1, and when
+    no bucket holds two classes: every model would then have no
+    support vector.
     """
-    cur = balanced_buckets(df, k)
-    fit = trainer.fit_buckets(cur, C=C, gamma=gamma, kernel=kernel,
-                              with_model=True, k=k).localCheckpoint()
-    models = trainer.collect_models(fit)
+    if k < 1:
+        raise ValueError(f"k must be ≥ 1, got {k}")
+    out = trainer.fit_buckets(balanced_buckets(df, k), k=k, C=C,
+                              gamma=gamma, with_model=True).toPandas()
+    models = trainer.models_of(out.itertuples())
     if all(m.n_sv == 0 for m in models.values()):
         # only a single-class bucket trains to no SVs
         raise ValueError(f"bagging_train: no bucket of {k} held two "
                          "classes, so no model has a support vector")
-    return models, trainer.svs_only(fit)
+    return models, trainer.local_svs(df.sparkSession, out)
 
 
 def bagging_predict(df: DataFrame, models: dict[int, SVCModel],

@@ -36,16 +36,16 @@ from parallel_svms_spark.ml import trainer
 from parallel_svms_spark.ml.smo import SVCModel
 from parallel_svms_spark.operators.partitioning import balanced_buckets
 
-SV_COLUMNS = ["bucket", "vec_id", "label", "embedding", "w"]
-# the returned SV frame's columns, as ``trainer.svs_only`` selects them
-SVS_SCHEMA = "bucket int, vec_id long, label int, embedding array<float>"
 
-
-def _validate_k(k: int) -> None:
+def _validate(k: int, cap: int | None) -> None:
     # reference intends power-of-2 but its check is buggy
     # (`subsets % 2 != 0`, cascade_svm/Driver.java:49-52); do it right
     if k < 2 or (k & (k - 1)) != 0:
         raise ValueError(f"k must be a power of two ≥ 2, got {k}")
+    # a cap under two rows leaves no bucket two classes to train on
+    if cap is not None and not (isinstance(cap, int) and cap >= 2):
+        raise ValueError("max_rows_per_bucket must be None or an int ≥ 2, "
+                         f"got {cap!r}")
 
 
 def _merge_tail(fit: DataFrame, k: int, fit_kw: dict) -> DataFrame:
@@ -64,7 +64,7 @@ def _merge_tail(fit: DataFrame, k: int, fit_kw: dict) -> DataFrame:
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         is_sv = pdf["kind"] == "sv"
         extra = pdf[~is_sv].to_dict("records")
-        pdf = pdf.loc[is_sv, SV_COLUMNS]
+        pdf = pdf.loc[is_sv, [*trainer.BUCKET_SV_COLUMNS, "w"]]
         n, layer = k, 0
         while n > 1 and len(pdf):
             n, layer = n // 2, layer + 1
@@ -83,8 +83,7 @@ def _merge_tail(fit: DataFrame, k: int, fit_kw: dict) -> DataFrame:
 
 
 def cascade_train(df: DataFrame, k: int, C: float = 1.0,
-                  gamma: float | None = None, kernel: str = "rbf",
-                  stats_out: dict | None = None,
+                  gamma: float | None = None, stats_out: dict | None = None,
                   max_rows_per_bucket: int | None = 20000,
                   ) -> tuple[SVCModel, DataFrame]:
     """Train cascade SVM; returns (final model, final SV DataFrame).
@@ -111,8 +110,8 @@ def cascade_train(df: DataFrame, k: int, C: float = 1.0,
     (ADVICE r7: callers see when the default changed their result).
     Both come from the fits' stat rows, at no extra job.
 
-    ``max_rows_per_bucket`` bounds every layer's per-bucket dual at
-    that many rows (see ``trainer.cap_bucket_rows``) — the
+    ``max_rows_per_bucket`` (None or an int ≥ 2) bounds every layer's
+    per-bucket dual at that many rows (see ``trainer.cap_bucket_rows``) — the
     zero-SV-shedding worst case then degrades in accuracy instead of
     OOMing; at the default 20k the largest per-pair kernel is
     ~(2/N_cls·20k)² doubles (≈128 MB at 10 classes). **NOTE (r7
@@ -126,12 +125,12 @@ def cascade_train(df: DataFrame, k: int, C: float = 1.0,
     layer's fit emitted; layer-0 rows were never trained, so the first
     cap is the stratified coin.
 
-    Raises ``ValueError`` when no layer-0 bucket holds two classes: no
-    support vector would then reach the merge, and there is no model.
+    Raises ``ValueError`` before any Spark job for a bad ``k`` or cap,
+    and when no layer-0 bucket holds two classes: no support vector
+    would then reach the merge, and there is no model.
     """
-    _validate_k(k)
-    fit_kw = dict(C=C, gamma=gamma, kernel=kernel,
-                  max_rows_per_bucket=max_rows_per_bucket)
+    _validate(k, max_rows_per_bucket)
+    fit_kw = dict(C=C, gamma=gamma, max_rows_per_bucket=max_rows_per_bucket)
     layer0 = trainer.fit_buckets(balanced_buckets(df, k), k=k, **fit_kw)
     out = _merge_tail(layer0, k, fit_kw).toPandas()
     models = trainer.models_of(out.itertuples())
@@ -149,6 +148,4 @@ def cascade_train(df: DataFrame, k: int, C: float = 1.0,
             layers=[(k >> int(l), int(n)) for l, n in per["n_train"].items()],
             shed=[int(n) for n in per["n_shed"]])
     (model,) = models.values()
-    svs = out.loc[out["kind"] == "sv", ["bucket", "vec_id", "label",
-                                         "embedding"]]
-    return model, df.sparkSession.createDataFrame(svs, SVS_SCHEMA)
+    return model, trainer.local_svs(df.sparkSession, out)

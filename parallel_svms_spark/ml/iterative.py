@@ -33,9 +33,6 @@ from parallel_svms_spark.operators.partitioning import balanced_buckets
 
 MAX_ITERATIONS = 3  # reference hard cap, Iterative_svm/Driver.java:85
 
-GSV_SCHEMA = "vec_id long, label int, embedding array<float>"
-GSV_COLUMNS = ["vec_id", "label", "embedding"]
-
 
 def _round_fit(base: DataFrame, k: int, gsv: Broadcast,
                fit_kw: dict) -> DataFrame:
@@ -60,7 +57,7 @@ def _round_fit(base: DataFrame, k: int, gsv: Broadcast,
 
 
 def iterative_train(df: DataFrame, k: int, C: float = 1.0,
-                    gamma: float | None = None, kernel: str = "rbf",
+                    gamma: float | None = None,
                     ) -> tuple[DataFrame, list[int]]:
     """Returns (final global SV DataFrame, per-iteration errorsums).
 
@@ -72,13 +69,16 @@ def iterative_train(df: DataFrame, k: int, C: float = 1.0,
     (`while (newerrorsum < olderrorsum && iteration < 3)`,
     Iterative_svm/Driver.java:85).
 
-    Raises ``ValueError`` when no bucket holds two classes: the first
-    round then finds no support vector, and no later round can.
+    Raises ``ValueError`` before any Spark job when ``k`` < 1, and
+    when no bucket holds two classes: the first round then finds no
+    support vector, and no later round can.
     """
+    if k < 1:
+        raise ValueError(f"k must be ≥ 1, got {k}")
     spark = df.sparkSession
     base = balanced_buckets(df, k).localCheckpoint()
-    fit_kw = dict(C=C, gamma=gamma, kernel=kernel)
-    gsv = pd.DataFrame(columns=GSV_COLUMNS).astype(
+    fit_kw = dict(C=C, gamma=gamma)
+    gsv = pd.DataFrame(columns=trainer.SV_COLUMNS).astype(
         {"vec_id": "int64", "label": "int32"})
     errorsums: list[int] = []
     for _ in range(MAX_ITERATIONS):
@@ -86,11 +86,11 @@ def iterative_train(df: DataFrame, k: int, C: float = 1.0,
         try:
             out = (_round_fit(base, k, bc, fit_kw)
                    .filter("kind != 'stat'")
-                   .select("kind", "err", *GSV_COLUMNS).toPandas())
+                   .select("kind", "err", *trainer.SV_COLUMNS).toPandas())
         finally:
             bc.destroy()
         errorsums.append(int(out.loc[out["kind"] == "err", "err"].sum()))
-        new = (out.loc[out["kind"] == "sv", GSV_COLUMNS]
+        new = (out.loc[out["kind"] == "sv", trainer.SV_COLUMNS]
                .sort_values("vec_id", kind="mergesort")
                .drop_duplicates("vec_id"))
         gsv = pd.concat([gsv, new], ignore_index=True)
@@ -101,4 +101,4 @@ def iterative_train(df: DataFrame, k: int, C: float = 1.0,
                              "support vector")
         if len(errorsums) > 1 and not errorsums[-1] < errorsums[-2]:
             break
-    return spark.createDataFrame(gsv, GSV_SCHEMA), errorsums
+    return spark.createDataFrame(gsv, trainer.SV_SCHEMA), errorsums

@@ -28,6 +28,7 @@ from concurrent.futures import ThreadPoolExecutor
 import numpy as np
 
 TAU = 1e-12
+EPS = 1e-3  # the reference's stopping tolerance, Midcascade.java:62-81
 
 
 def _n_cpus() -> int:
@@ -78,22 +79,11 @@ def linear_kernel(X1: np.ndarray, X2: np.ndarray, gamma: float = 0.0) -> np.ndar
 KERNELS = {"rbf": rbf_kernel, "linear": linear_kernel}
 
 
-def smo_solve(K: np.ndarray, y: np.ndarray, C: float = 1.0,
-              eps: float = 1e-3, max_iter: int | None = None):
-    """Solve min ½αᵀQα − eᵀα, 0 ≤ α ≤ C, yᵀα = 0 with Q=yyᵀ∘K.
+def smo_solve(K: np.ndarray, y: np.ndarray, C: float = 1.0):
+    """Solve min ½αᵀQα − eᵀα, 0 ≤ α ≤ C, yᵀα = 0 with Q=yyᵀ∘K to ``EPS``.
 
     Returns (alpha, rho) with LibSVM's sign convention:
     decision(x) = Σ αᵢ yᵢ K(xᵢ,x) − rho.
-
-    max_iter None → clamp(100·n, 10⁴, 250·10³): on degenerate duals
-    (rank-deficient kernels over near-random data) SMO zigzags with
-    ~0 objective progress per step; an unscaled ceiling turns one such
-    sub-problem into minutes of spin for an α no better than the
-    capped one. The absolute ceiling only binds for single problems
-    past ~2.5k rows, which under the engine's bucket-sizing contract
-    occur only in the no-SV-reduction degenerate regime (where more
-    iterations don't help either); convergent problems stop on the
-    eps gap long before any cap.
 
     LibSVM's active-set heuristic (on in the reference,
     cascade_svm/Midcascade.java:74) is left out: it pays because
@@ -111,13 +101,19 @@ def smo_solve(K: np.ndarray, y: np.ndarray, C: float = 1.0,
     ``_smo_native`` docstring), so both return the same (alpha, rho).
     """
     n = len(y)
-    if max_iter is None:
-        max_iter = max(10_000, min(100 * n, 250_000))
+    # iteration cap clamp(100·n, 10⁴, 250·10³): on degenerate duals
+    # (rank-deficient kernels over near-random data) SMO zigzags with
+    # ~0 objective progress per step, and an unscaled ceiling turns one
+    # such dual into minutes of spin for an α no better than the capped
+    # one. The absolute ceiling binds only past ~2.5k rows, which under
+    # the bucket-sizing contract occurs only in that degenerate regime;
+    # convergent duals stop on the EPS gap long before any cap.
+    max_iter = max(10_000, min(100 * n, 250_000))
     from parallel_svms_spark.ml import _smo_native
     lib = _smo_native.load()
     if lib is not None:
-        return _smo_solve_noshrink_native(lib, K, y, C, eps, max_iter)
-    return _smo_solve_general(K, y, C, eps, max_iter)
+        return _smo_solve_noshrink_native(lib, K, y, C, EPS, max_iter)
+    return _smo_solve_general(K, y, C, EPS, max_iter)
 
 
 def _smo_solve_general(K: np.ndarray, y: np.ndarray, C: float,
@@ -289,16 +285,11 @@ class SVCModel:
 
 
 def train_svc(X: np.ndarray, y: np.ndarray, C: float = 1.0,
-              gamma: float | str | None = None, kernel: str = "rbf",
-              eps: float = 1e-3) -> SVCModel:
+              gamma: float | None = None, kernel: str = "rbf") -> SVCModel:
     """Train one-vs-one C-SVC (reference defaults: C=1, γ=1/n_features,
-    eps=1e-3 — cascade_svm/Midcascade.java:62-81).
-
-    gamma: numeric, None → 1/n_features (the reference's
-    γ=1/max_feature_index, Midcascade.java:70), or "scale" →
-    1/(n_features·Var[X]) — needed when features are unit-normalized
-    (then pairwise ‖a−b‖²≈2 and 1/n_features makes the kernel nearly
-    constant).
+    eps=``EPS`` — cascade_svm/Midcascade.java:62-81). ``gamma`` None is
+    the reference's γ=1/max_feature_index (Midcascade.java:70).
+    ``kernel`` is "rbf" (every trainer's) or "linear" (``ml.quality``'s).
 
     Classes are ordered by sorted value (LibSVM orders by first
     appearance; sorted is deterministic under any partitioning —
@@ -335,9 +326,6 @@ def train_svc(X: np.ndarray, y: np.ndarray, C: float = 1.0,
                          f"missing (first at row {bad[0]})")
     if gamma is None:
         gamma = 1.0 / X.shape[1]
-    elif gamma == "scale":
-        v = float(X.var())
-        gamma = 1.0 / (X.shape[1] * v) if v > 0 else 1.0 / X.shape[1]
     classes = np.unique(y)  # sorted
 
     def solve(pair):
@@ -345,7 +333,7 @@ def train_svc(X: np.ndarray, y: np.ndarray, C: float = 1.0,
         sel = np.flatnonzero((y == classes[a]) | (y == classes[b]))
         ys = np.where(y[sel] == classes[a], 1.0, -1.0)
         Ks = K_full[np.ix_(sel, sel)]
-        alpha, rho = smo_solve(Ks, ys, C=C, eps=eps)
+        alpha, rho = smo_solve(Ks, ys, C=C)
         nz = alpha > TAU
         return sel[nz], alpha[nz] * ys[nz], rho
 

@@ -22,6 +22,9 @@ task that runs every cascade layer after layer 0 — and inside it
 ``smo.train_svc`` solves the one-vs-one pairs on threads. A narrow
 layer (few buckets) therefore still uses the executor's cores without
 replicating rows across pairs.
+
+One parameter set: the reference's RBF C-SVC (Midcascade.java:62-81),
+with ``C`` and ``gamma`` the only hyperparameters a trainer takes.
 """
 
 from __future__ import annotations
@@ -31,9 +34,15 @@ import pickle
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from parallel_svms_spark.ml import smo
+
+# a support vector's row in every SV frame the trainers return, behind
+# the bucket that trained it where a frame has one
+SV_SCHEMA = "vec_id long, label int, embedding array<float>"
+SV_COLUMNS = [c.split()[0] for c in SV_SCHEMA.split(", ")]
+BUCKET_SV_COLUMNS = ["bucket", *SV_COLUMNS]
 
 # wide output schema shared by all three algorithm drivers:
 #   kind='sv'     → one row per support vector (M2, Midcascade.java:123-128)
@@ -48,9 +57,9 @@ from parallel_svms_spark.ml import smo
 # w: on 'sv' rows, the row's largest |dual coef| over the bucket
 # model's pairs (= its max α); ``cap_bucket_rows`` sheds the smallest
 # first. Null on the other kinds.
-FIT_SCHEMA = ("bucket int, kind string, vec_id long, label int, "
-              "embedding array<float>, err long, model binary, "
-              "w double, layer int, n_in long, n_shed long, n_sv long")
+FIT_SCHEMA = (f"bucket int, kind string, {SV_SCHEMA}, err long, "
+              "model binary, w double, layer int, n_in long, n_shed long, "
+              "n_sv long")
 FIT_COLUMNS = [c.split()[0] for c in FIT_SCHEMA.split(", ")]
 
 
@@ -100,8 +109,7 @@ def cap_bucket_rows(pdf: pd.DataFrame, cap: int | None) -> pd.DataFrame:
 
 
 def train_bucket(pdf: pd.DataFrame, C: float = 1.0,
-                 gamma: float | None = None, kernel: str = "rbf",
-                 eps: float = 1e-3, with_model: bool = False,
+                 gamma: float | None = None, with_model: bool = False,
                  eval_train: bool = False,
                  max_rows_per_bucket: int | None = None,
                  ) -> tuple[pd.DataFrame, list[dict]]:
@@ -120,7 +128,7 @@ def train_bucket(pdf: pd.DataFrame, C: float = 1.0,
     pdf = pdf.sort_values("vec_id", kind="mergesort").reset_index(drop=True)
     X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     y = pdf["label"].to_numpy()
-    model = smo.train_svc(X, y, C=C, gamma=gamma, kernel=kernel, eps=eps)
+    model = smo.train_svc(X, y, C=C, gamma=gamma)
     sv = pdf.iloc[model.sv_orig_idx]
     w = np.zeros(model.n_sv)
     for idx, coef in model.pair_coefs.values():
@@ -159,41 +167,43 @@ def fit_rows(svs: pd.DataFrame, extra: list[dict]) -> pd.DataFrame:
     return out.reindex(columns=FIT_COLUMNS)
 
 
-def fit_buckets(df: DataFrame, C: float = 1.0, gamma: float | None = None,
-                kernel: str = "rbf", eps: float = 1e-3,
-                with_model: bool = False, eval_train: bool = False,
-                k: int | None = None,
+def fit_buckets(df: DataFrame, k: int, C: float = 1.0,
+                gamma: float | None = None, with_model: bool = False,
+                eval_train: bool = False,
                 max_rows_per_bucket: int | None = None) -> DataFrame:
-    """M1 per-bucket C-SVC train over ``groupBy('bucket')``.
+    """M1 per-bucket C-SVC train, one task per bucket.
 
-    df columns: vec_id, label, embedding, bucket[, w]. Returns
-    FIT_SCHEMA rows, one ``stat`` row per bucket among them.
-    LibSVM-default params (C=1, γ=1/n_features, eps=1e-3 —
-    cascade_svm/Midcascade.java:62-81). ``max_rows_per_bucket`` caps
-    each bucket inside its task (``cap_bucket_rows``) before it trains.
+    df columns: vec_id, label, embedding, bucket[, w], with buckets
+    numbered 0..k-1. Returns FIT_SCHEMA rows, one ``stat`` row per
+    bucket among them. LibSVM-default params (C=1, γ=1/n_features,
+    eps=``smo.EPS`` — cascade_svm/Midcascade.java:62-81).
+    ``max_rows_per_bucket`` caps each bucket inside its task
+    (``cap_bucket_rows``) before it trains.
 
-    Pass ``k`` (the bucket count, buckets numbered 0..k-1) whenever
-    known: partition i then holds exactly bucket i, so every bucket
-    trains in its own task and the grouped map reuses that one
-    exchange. Without it the grouping exchange is hash-partitioned and
-    AQE's byte-based coalescing may pack several buckets into one task
-    — training cost is CPU per group, not bytes.
+    ``repartitionById(k, "bucket")`` puts exactly bucket i in
+    partition i, and the grouped map reuses that one exchange. Which
+    rows share a task cannot change a bucket's model: ``train_bucket``
+    sorts its rows by ``vec_id``.
     """
-    if k is not None:
-        df = df.repartitionById(k, "bucket")
-
     def train(pdf: pd.DataFrame) -> pd.DataFrame:
         return fit_rows(*train_bucket(
-            pdf, C=C, gamma=gamma, kernel=kernel, eps=eps,
-            with_model=with_model, eval_train=eval_train,
-            max_rows_per_bucket=max_rows_per_bucket))
+            pdf, C=C, gamma=gamma, with_model=with_model,
+            eval_train=eval_train, max_rows_per_bucket=max_rows_per_bucket))
 
-    return df.groupBy("bucket").applyInPandas(train, schema=FIT_SCHEMA)
+    return (df.repartitionById(k, "bucket").groupBy("bucket")
+            .applyInPandas(train, schema=FIT_SCHEMA))
 
 
 def svs_only(fit_result: DataFrame) -> DataFrame:
     return (fit_result.filter(fit_result.kind == "sv")
-            .select("bucket", "vec_id", "label", "embedding"))
+            .select(*BUCKET_SV_COLUMNS))
+
+
+def local_svs(spark: SparkSession, out: pd.DataFrame) -> DataFrame:
+    """The SV rows of a collected fit as a local DataFrame."""
+    return spark.createDataFrame(out.loc[out["kind"] == "sv",
+                                         BUCKET_SV_COLUMNS],
+                                 "bucket int, " + SV_SCHEMA)
 
 
 def models_of(rows) -> dict[int, smo.SVCModel]:

@@ -415,6 +415,47 @@ def test_cascade_is_one_query(spark, degenerate):
     assert len(jobs) <= 3, sorted(jobs)
 
 
+def test_bagging_is_one_query(spark, degenerate):
+    """Bagging's fit and its read-back are one query: at most 2 Spark
+    jobs (the bucket shuffle and the collect), where a checkpoint of
+    the fit and a second job for its model rows took 3."""
+    df, _, dim = degenerate
+    sc = spark.sparkContext
+    sc.setJobGroup("bagging_is_one_query", "bagging job count")
+    try:
+        bagging_train(df, k=4, gamma=1.0 / dim)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("bagging_is_one_query")
+    assert len(jobs) <= 2, sorted(jobs)
+
+
+def _sv_rows(svs):
+    return sorted((r.bucket, r.vec_id, r.label,
+                   np.asarray(r.embedding, dtype=np.float32).tobytes())
+                  for r in svs.collect())
+
+
+def test_bagging_equals_fit_buckets(degenerate):
+    """Bagging reads back the fit ``fit_buckets`` plans: the same
+    models, every array to the bit and dtype, and the same SV rows as
+    ``collect_models`` and ``svs_only`` over that fit."""
+    from parallel_svms_spark.operators.partitioning import balanced_buckets
+
+    df, _, dim = degenerate
+    models, svs = bagging_train(df, k=4, gamma=1.0 / dim)
+    fit = trainer.fit_buckets(balanced_buckets(df, 4), k=4, gamma=1.0 / dim,
+                              with_model=True).localCheckpoint()
+    ref = trainer.collect_models(fit)
+    assert sorted(models) == sorted(ref) == [0, 1, 2, 3]
+    for b, m in ref.items():
+        assert models[b].to_dict() == m.to_dict()
+        assert models[b].X_sv.dtype == m.X_sv.dtype
+        assert models[b].X_sv.tobytes() == m.X_sv.tobytes()
+    assert _sv_rows(svs) == _sv_rows(trainer.svs_only(fit))
+    assert svs.schema == trainer.svs_only(fit).schema
+
+
 def test_cascade_shed_log_zero_when_cap_inactive(blobs):
     """ADVICE r7: stats_out['shed'] reports exactly when the cap
     fires — all-zero on the well-behaved fixture under the default
@@ -470,3 +511,21 @@ def test_vote_over_no_models_raises_on_the_driver():
         trainer.vote_df(_NotADataFrame(), [])
     with pytest.raises(ValueError, match="at least one model"):
         bagging_predict(_NotADataFrame(), {})
+
+
+@pytest.mark.parametrize("cap", [0, 1, -5, 2.5])
+def test_cascade_rejects_bad_cap_on_the_driver(cap):
+    """A cap under two rows would fail in every task (0), blame the
+    data for a bucket of one row (1) or drop rows silently (-5): each
+    is a ValueError before any Spark call."""
+    with pytest.raises(ValueError, match="max_rows_per_bucket"):
+        cascade_train(_NotADataFrame(), k=8, max_rows_per_bucket=cap)
+
+
+@pytest.mark.parametrize("train", [bagging_train, iterative_train])
+@pytest.mark.parametrize("k", [0, -1])
+def test_bagging_and_iterative_reject_bad_k_on_the_driver(train, k):
+    """k < 1 is a ValueError before any Spark call, not a task failure
+    (iterative's REMAINDER_BY_ZERO) or PySpark's numPartitions error."""
+    with pytest.raises(ValueError, match="k must be"):
+        train(_NotADataFrame(), k=k)

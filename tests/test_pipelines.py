@@ -161,7 +161,7 @@ def test_iterative_round_one_task_per_bucket(spark, emb):
     from parallel_svms_spark.operators.partitioning import balanced_buckets
     base = balanced_buckets(emb, 4).localCheckpoint()
     gsv = base.filter("vec_id % 7 = 0") \
-        .select(*iterative.GSV_COLUMNS).toPandas()
+        .select(*trainer.SV_COLUMNS).toPandas()
     fit = iterative._round_fit(base, 4, spark.sparkContext.broadcast(gsv),
                                dict(gamma=2.0))
     plan = fit._jdf.queryExecution().executedPlan().toString()
@@ -178,7 +178,7 @@ def test_iterative_round_one_task_per_bucket(spark, emb):
 
 def test_trainer_err_rows(spark, emb):
     from parallel_svms_spark.operators.partitioning import balanced_buckets
-    fit = trainer.fit_buckets(balanced_buckets(emb, 2), eval_train=True)
+    fit = trainer.fit_buckets(balanced_buckets(emb, 2), k=2, eval_train=True)
     errs = fit.filter("kind = 'err'")
     assert errs.count() == 20  # 2 buckets × 10 classes
     assert errs.filter("err < 0 or err > 100").count() == 0
